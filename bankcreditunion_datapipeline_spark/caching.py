@@ -75,7 +75,8 @@ def release_transients() -> int:
     return n
 
 
-_LAST_QUERY: list[str | None] = [None]
+# the last query entered and how many times in a row it has entered
+_LAST_QUERY: list = [None, 0]
 
 
 def sweep_if_over_bound(query_name: str | None = None) -> int:
@@ -91,13 +92,16 @@ def sweep_if_over_bound(query_name: str | None = None) -> int:
     releasing between the two runs would evict the stage caches the
     second run exists to reuse (q49's funnel rebuilt its whole
     persisted chain cold on run 2 whenever the bound happened to trip
-    there: driver 2.79->3.46s on untouched code). The bound still
-    holds: the release fires at the next DIFFERENT query's entry,
-    one query later at most.
+    there: driver 2.79->3.46s on untouched code). It defers once per
+    run of one query: the second consecutive entry defers, the third
+    and later ones sweep, so a query entered N times in a row cannot
+    grow the transients without bound.
     """
-    same = query_name is not None and query_name == _LAST_QUERY[0]
-    _LAST_QUERY[0] = query_name
-    if not same and len(TRANSIENTS) > transient_bound():
+    if query_name is not None and query_name == _LAST_QUERY[0]:
+        _LAST_QUERY[1] += 1
+    else:
+        _LAST_QUERY[:] = [query_name, 1]
+    if _LAST_QUERY[1] != 2 and len(TRANSIENTS) > transient_bound():
         return release_transients()
     return 0
 

@@ -2,8 +2,9 @@
 `financial_institution` -> four gold tables.
 
 This is the domain capability of the reference re-expressed as pure
-DataFrame transforms (testable without IO; `run_silver`/`run_gold` compose
-them with sinks):
+DataFrame transforms (testable without IO; `build_silver` returns silver
+and its quarantine, `run_gold` composes the gold transforms with sinks --
+it computes silver once for all four writes and releases it on return):
 
   bronze institutions/financials     (FDIC,  silverLayer/BuildSilverLayer.py:139-193)
   bronze foicu/fs220/fs220d          (NCUA,  silverLayer/BuildSilverLayer.py:196-269)
@@ -273,31 +274,54 @@ def gold_quarterly_pivot(
 
 def run_gold(silver: DataFrame, out_dir: str, quarters: list[str] | None = None) -> None:
     """Publish the four gold tables with the reference's disk partitioning
-    (goldLayer/BuildGoldLayer.py:212-237)."""
+    (goldLayer/BuildGoldLayer.py:212-237).
+
+    Silver is computed once for all four writes: it is persisted for the
+    duration of the call and released on return, unless the caller already
+    holds it cached (the CacheManager looks the entry up by plan, and the
+    caller's entry stays the caller's). The quarter list, when not given,
+    is read from that cached silver once and shared by both pivots."""
     from ..sinks import write_gold
 
-    # O3: cluster rows by name inside each write partition (reference
-    # repartition + sortWithinPartitions, goldLayer/BuildGoldLayer.py:158-159)
-    # so downstream name-range scans read contiguous row groups.
-    write_gold(
-        gold_directory(silver)
-        .repartition("institution_type", "state")
-        .sortWithinPartitions("name"),
-        f"{out_dir}/institutions_directory_by_type",
-        partition_by=["institution_type", "state"],
-    )
-    write_gold(
-        gold_fact(silver),
-        f"{out_dir}/assets_deposits_by_state",
-        partition_by=["year", "quarter", "state"],
-    )
-    write_gold(
-        gold_quarterly_assets(silver, quarters),
-        f"{out_dir}/quarterly_assets_table",
-        overwrite_schema=True,
-    )
-    write_gold(
-        gold_quarterly_deposits(silver, quarters),
-        f"{out_dir}/quarterly_deposits_table",
-        overwrite_schema=True,
-    )
+    level = silver.storageLevel
+    owned = not (level.useMemory or level.useDisk)
+    if owned:
+        silver.persist()
+    try:
+        if quarters is None:
+            quarters = sorted(
+                r[0]
+                for r in silver.select(F.date_format("quarter_date", "yyyy-MM-dd"))
+                .distinct()
+                .collect()
+            )
+        # O3: cluster rows by name inside each write partition (reference
+        # repartition + sortWithinPartitions, goldLayer/BuildGoldLayer.py:158-159)
+        # so downstream name-range scans read contiguous row groups. Each
+        # partitioned write is clustered by its partition columns, so every
+        # partition directory gets one file whatever silver's partitioning.
+        write_gold(
+            gold_directory(silver)
+            .repartition("institution_type", "state")
+            .sortWithinPartitions("name"),
+            f"{out_dir}/institutions_directory_by_type",
+            partition_by=["institution_type", "state"],
+        )
+        write_gold(
+            gold_fact(silver).repartition("year", "quarter", "state"),
+            f"{out_dir}/assets_deposits_by_state",
+            partition_by=["year", "quarter", "state"],
+        )
+        write_gold(
+            gold_quarterly_assets(silver, quarters),
+            f"{out_dir}/quarterly_assets_table",
+            overwrite_schema=True,
+        )
+        write_gold(
+            gold_quarterly_deposits(silver, quarters),
+            f"{out_dir}/quarterly_deposits_table",
+            overwrite_schema=True,
+        )
+    finally:
+        if owned:
+            silver.unpersist()

@@ -123,6 +123,9 @@ def main() -> None:
         prev_cpus = 0
     if cpus >= prev_cpus:
         paths.append(main_path)
+    else:
+        # say so, or the main record's older totals read as current
+        print(f"# skipped main sidecar (cpus {cpus} < {prev_cpus})", file=sys.stderr)
     for sidecar_path in paths:
         with open(sidecar_path, "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)

@@ -55,6 +55,13 @@ def test_sweep_defers_on_same_query_reentry(spark, monkeypatch):
     transient_persist(spark.range(5))
     assert sweep_if_over_bound("qX") == 0, "same-query re-entry defers"
     assert sweep_if_over_bound("qY") == 1, "next different query sweeps"
+    # the deferral happens once per run of one query: its third
+    # consecutive entry sweeps, so N re-entries cannot grow TRANSIENTS
+    transient_persist(spark.range(5))
+    assert sweep_if_over_bound("qY") == 0, "second entry defers"
+    assert sweep_if_over_bound("qY") == 1, "third consecutive entry sweeps"
+    transient_persist(spark.range(5))
+    assert sweep_if_over_bound("qY") == 1, "and so does every later one"
 
 
 def test_registry_wrapper_sweeps_between_queries(spark, sf_dir, monkeypatch):

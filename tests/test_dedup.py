@@ -614,7 +614,7 @@ def test_winnowing_arrow_kernel_matches_expression_lane(spark, sf_dir):
     (guide §4.2). The kernel must emit EXACTLY the rows of the
     relational reference lane -- on the corpus fixture and on the edge
     shapes (short docs, whitespace-only, multi-space runs, tabs, NULLs,
-    unicode case)."""
+    unicode case, Greek final sigma, dotted I, capital sharp s)."""
     from bankcreditunion_datapipeline_spark.operators.dedup import (
         _winnow_fingerprints_expr,
         winnow_fingerprints,
@@ -633,6 +633,10 @@ def test_winnowing_arrow_kernel_matches_expression_lane(spark, sf_dir):
             (107, "ÜPPER Ünïcode CASE fold test here now"),
             (108, None),
             (109, "x " * 40),  # repeated token: duplicate grams
+            # conditional and special case mappings: a word-final capital
+            # sigma, dotted capital I, capital sharp s
+            (110, "ΟΔΟΣ ΣΑΣ. ΟΔΟΣ ΣΑΣ. end"),
+            (111, "İstanbul ẞtraße İSTANBUL ẞTRASSE here"),
         ],
         "doc_id long, text string",
     )

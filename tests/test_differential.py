@@ -290,3 +290,31 @@ def test_adversarial_subset_matches():
         timeout=900,
     )
     assert r.returncode == 0, r.stdout[-4000:] + r.stderr[-2000:]
+
+
+def test_q37_hash_ignores_part_row_order(spark, tmp_path):
+    # avg_price floors a mean: over an exact integer sum of cents it is
+    # the same whatever order the rows are summed in, on Spark and on the
+    # DuckDB oracle (a floored avg() of doubles flipped a cent on
+    # row-shuffled copies)
+    import duckdb
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from bankcreditunion_datapipeline_spark.queries import registry
+    from tools.check_correctness import frame_hash
+
+    q = registry()["q37_part_name_tokens"]
+    part = pq.read_table("/root/testdata/sf0.001/part.parquet")
+    hashes = set()
+    for seed in range(5):
+        sf_dir = tmp_path / f"shuffled{seed}"
+        sf_dir.mkdir()
+        perm = np.random.default_rng(seed).permutation(part.num_rows)
+        pq.write_table(part.take(perm), sf_dir / "part.parquet")
+        hashes.add(frame_hash(q.spark_fn(spark, str(sf_dir)).toPandas()))
+        con = duckdb.connect()
+        con.sql(f"CREATE VIEW part AS SELECT * FROM read_parquet('{sf_dir}/part.parquet')")
+        hashes.add(frame_hash(con.sql(q.oracle).df()))
+    hashes.add(frame_hash(q.spark_fn(spark, "/root/testdata/sf0.001").toPandas()))
+    assert len(hashes) == 1

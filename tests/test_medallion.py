@@ -4,16 +4,19 @@ silver financial_institution -> gold tables, with quarantine observability."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from bankcreditunion_datapipeline_spark.caching import storage_status
 from bankcreditunion_datapipeline_spark.plans.medallion import (
     build_silver,
     gold_directory,
     gold_fact,
     gold_quarterly_assets,
     gold_quarterly_deposits,
+    run_gold,
 )
 from bankcreditunion_datapipeline_spark.schemas import (
     FINANCIAL_INSTITUTION,
@@ -138,11 +141,70 @@ def test_gold_quarterly_pivots(spark, bronze):
 
 
 def test_gold_roundtrip_write_read(spark, bronze, tmp_path):
-    from bankcreditunion_datapipeline_spark.plans.medallion import run_gold
-
     silver = build_silver(*bronze).financial_institution
     run_gold(silver, str(tmp_path))
     directory = spark.read.parquet(str(tmp_path / "institutions_directory_by_type"))
     assert directory.count() == gold_directory(silver).count()
     # partition columns survive the round trip
     assert set(["institution_type", "state"]) <= set(directory.columns)
+
+
+GOLD_TABLES = (
+    "institutions_directory_by_type",
+    "assets_deposits_by_state",
+    "quarterly_assets_table",
+    "quarterly_deposits_table",
+)
+
+
+def _gold_rows(spark, out_dir):
+    out = {}
+    for name in GOLD_TABLES:
+        df = spark.read.parquet(f"{out_dir}/{name}")
+        out[name] = (sorted(df.columns), sorted(df.collect(), key=repr))
+    return out
+
+
+def test_run_gold_finds_quarters_once_same_output(spark, bronze, tmp_path):
+    # the quarter list run_gold reads from silver gives the same four
+    # tables, column for column, as the caller's explicit list
+    silver = build_silver(*bronze).financial_institution
+    run_gold(silver, str(tmp_path / "found"))
+    run_gold(silver, str(tmp_path / "given"), quarters=["2020-03-31", "2020-06-30"])
+    found = _gold_rows(spark, tmp_path / "found")
+    assert found == _gold_rows(spark, tmp_path / "given")
+    assert spark.read.parquet(str(tmp_path / "found" / "quarterly_assets_table")).columns[3:] == [
+        "2020-06-30", "2020-03-31",
+    ]
+
+
+def test_run_gold_one_file_per_partition_directory(spark, bronze, tmp_path):
+    # a silver spread over several partitions still yields one file per
+    # leaf directory: the fact write is clustered by its partition columns
+    silver = build_silver(*bronze).financial_institution.repartition(4)
+    run_gold(silver, str(tmp_path))
+    leaves = [
+        files
+        for _, _, files in os.walk(tmp_path / "assets_deposits_by_state")
+        if any(f.endswith(".parquet") for f in files)
+    ]
+    assert len(leaves) == gold_fact(silver).select("year", "quarter", "state").distinct().count()
+    assert all(sum(f.endswith(".parquet") for f in files) == 1 for files in leaves)
+
+
+def test_run_gold_releases_its_silver_cache(spark, bronze, tmp_path):
+    silver = build_silver(*bronze).financial_institution
+    before = storage_status(spark)["n_cached_rdds"]
+    run_gold(silver, str(tmp_path))
+    assert storage_status(spark)["n_cached_rdds"] == before
+    assert not silver.storageLevel.useMemory
+
+
+def test_run_gold_keeps_caller_cache(spark, bronze, tmp_path):
+    silver = build_silver(*bronze).financial_institution.persist()
+    try:
+        silver.count()
+        run_gold(silver, str(tmp_path))
+        assert silver.storageLevel.useMemory, "the caller's cache entry survives"
+    finally:
+        silver.unpersist()
