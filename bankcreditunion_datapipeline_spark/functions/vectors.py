@@ -31,40 +31,6 @@ def norm(a: Column | list[float]) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def dot_fast(a: Column, b: Column, dim: int) -> Column:
-    """`dot` with an optional UNROLLED form (``a[0]*b[0] + a[1]*b[1]
-    + ...`` guarded by a size check, falling back to the fold on ragged
-    rows) for a known dimension -- bit-identical to `dot` either way
-    (left-to-right adds including the 0.0 seed; see git history for the
-    signed-zero analysis).
-
-    r15 ADJUDICATION (VERDICT r14 #1): the unroll is now OFF by
-    default. An interleaved A/B (4 reps each way, fresh session per
-    rep, best-of-2 at sf0.1 on local[32], canary q01 stable at
-    0.43/0.49s) measured the HOF fold FASTER OR TIED at every call
-    site of the r14 rollout -- median seconds unroll vs fold:
-    q255 5.67/2.32, q334 5.06/2.32, q310 1.26/0.61, q305 1.80/1.03,
-    q254 1.73/1.01, q138 3.65/2.27, q137 1.97/1.70, q282 2.72/2.47,
-    q317 4.70/4.60 (tie). A 64-term element_at chain (x10 instances
-    after filter/projection duplication) blows past the JIT/codegen
-    budget and evaluates interpreted PER TERM, while the zip_with +
-    aggregate fold stays one tight interpreted loop -- the driver's
-    r14 bench showed the same family regression (q255 1.77->5.63s).
-    The unroll is kept behind SPARK_GRAFT_DOT_UNROLL=1 purely as the
-    measurement switch for future re-adjudication."""
-    import os
-
-    if dim <= 0 or os.environ.get("SPARK_GRAFT_DOT_UNROLL", "0") != "1":
-        return dot(a, b)
-    ad, bd = _as_double(a), _as_double(b)
-    unrolled: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        unrolled = unrolled + F.element_at(ad, i) * F.element_at(bd, i)
-    return F.when(
-        (F.size(ad) == dim) & (F.size(bd) == dim), unrolled
-    ).otherwise(dot(a, b))
-
-
 def _py_norm(v: list[float]) -> float:
     return sum(float(x) * float(x) for x in v) ** 0.5
 
@@ -95,25 +61,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def sign_bits(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-LSH signature: bit i = (vec . plane_i) >= 0, packed into a LONG.
-
-    Hamming distance between signatures approximates angular distance --
-    the bucketing primitive for ANN search and embedding near-dedup.
-    Requires len(planes) <= 63.
-    """
-    assert len(planes) <= 63, "signature must fit a signed 64-bit long"
-    bits = [
-        F.when(dot(vec, plane) >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        * F.lit(2 ** i).cast("long")
-        for i, plane in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two packed 64-bit signatures (bit_count of XOR)."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -124,8 +71,7 @@ def attach_sign_bits(df, planes: list[list[float]], vec_col: str = "embedding", 
     numpy matmul per batch, packed into a LONG column appended to the input.
 
     This replaces n_planes interpreted HOF folds per row with one BLAS call
-    per Arrow batch -- the scale path for signature computation (the
-    expression form `sign_bits` stays for single-vector / plan-only uses).
+    per Arrow batch -- the engine's one signature computation.
     Sign flips vs sequential summation require |dot| ~ 1e-16, measure-zero
     with Gaussian planes; downstream candidates are exact-verified anyway.
     """

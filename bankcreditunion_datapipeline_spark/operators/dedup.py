@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import transient_persist
-from ..functions.vectors import attach_sign_bits, cosine, hamming64, random_hyperplanes
+from ..functions.vectors import attach_sign_bits, cosine, dot, hamming64, random_hyperplanes
 
 def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Spread CPU-heavy narrow work across the cluster when the input arrives
@@ -341,16 +341,6 @@ def attach_minhash_from_hashes(
     return df.mapInPandas(fn, schema)
 
 
-def with_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_k: int = 3,
-    out: str = "minhash",
-) -> DataFrame:
-    return df.withColumn(out, minhash_signature(word_shingles(F.col(text_col), shingle_k), num_hashes))
-
-
 def lsh_band_table(
     df: DataFrame,
     id_col: str,
@@ -599,7 +589,7 @@ def connected_components(pairs: DataFrame, max_iters: int = 10) -> DataFrame:
             # frame through the plan-keyed CacheManager lookup --
             # eagerly dropping it forced the whole upstream pair
             # pipeline to re-run (measured: q249's CC pair 2.1s vs
-            # 6.2s warm). The bounded transient sweep reclaims it.
+            # 6.2s warm). The next different query's entry releases it.
             TRANSIENTS.append(edges)
             return local_result_frame(
                 pairs.sparkSession,
@@ -1383,31 +1373,12 @@ def incremental_near_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int:
-    """Probe the vector width from any non-NULL row (ONE tiny job).
-
-    The width is corpus metadata: probe it from the narrowest frame
-    available (the raw embeddings SCAN, not a frame behind a join --
-    probing a joined frame runs the join just to read one array size).
-    Returns 0 for an empty/all-NULL column; `dot_fast` then falls back
-    to the HOF fold, which handles any width. The single shared probe
-    for release_corpus, the queries-side sem lane, and
-    semantic_dedup_pairs' own dim=None path."""
-    row = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.size(vec_col).alias("__d"))
-        .first()
-    )
-    return int(row["__d"]) if row and row["__d"] is not None else 0
-
-
 def semantic_dedup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cluster_col: str = "label",
     threshold: float = 0.95,
-    dim: "int | None" = None,
     persist_fn=None,
 ) -> DataFrame:
     """SemDeDup-style semantic duplicate pairs: exact pairwise cosine
@@ -1419,29 +1390,20 @@ def semantic_dedup_pairs(
 
     Norms are computed ONCE per row before the self-join (the join fans
     each row into ~cluster_size pairs; folding the norm inside the pair
-    expression would recompute it per pair), ride the same
-    dimension-unrolled codegen form as the pair dot (functions/vectors.
-    dot_fast -- bit-identical to the HOF fold including the 0.0 seed),
-    and the projected base is PERSISTED before the self-join: both join
-    sides would otherwise replay the upstream frame (in the release
-    plan that is a survivors-x-embeddings join plus the cast and norm,
-    measured ~2x the stage cost at sf0.1).
+    expression would recompute it per pair), and the projected base is
+    PERSISTED before the self-join: both join sides would otherwise
+    replay the upstream frame (in the release plan that is a
+    survivors-x-embeddings join plus the cast and norm, measured ~2x
+    the stage cost at sf0.1).
 
     `persist_fn` overrides how the projected base is persisted: callers
-    with a stricter cache-lifetime contract than the bounded transient
-    sweep (streaming_release_manifest, whose inputs scan MUTABLE state
+    with a stricter cache-lifetime contract than the query-change
+    release (streaming_release_manifest, whose inputs scan MUTABLE state
     dirs and must leave no cache behind) pass their own pin/unpersist
-    hook; default is the bounded transient register (caching.py).
+    hook; default is the transient register (caching.py).
     """
-    from ..functions.vectors import dot_fast as _dot_fast
-
-    if dim is None:
-        # probe the width from any row (one tiny job; callers that know
-        # the width -- e.g. release_corpus probing the embeddings table
-        # BEFORE the survivors join -- pass `dim` and skip it)
-        dim = embedding_dim(df, vec_col)
     vd = F.col(vec_col).cast("array<double>")
-    # registered as a bounded-lifetime transient (caching.py, r13 ADVICE:
+    # registered as a query-lifetime transient (caching.py, r13 ADVICE:
     # a plain persist here leaked one session-lifetime cache entry per
     # invocation -- q120 plus every release configuration)
     base = (persist_fn or transient_persist)(
@@ -1452,7 +1414,7 @@ def semantic_dedup_pairs(
             # join replicates each row ~cluster_size times; casting in the
             # pair expression would re-cast per pair) -- the q317 lane
             vd.alias("__vd"),
-            F.sqrt(_dot_fast(vd, vd, dim)).alias("__n"),
+            F.sqrt(dot(vd, vd)).alias("__n"),
         )
     )
     a = base.select(
@@ -1467,9 +1429,7 @@ def semantic_dedup_pairs(
         F.col("__vd").alias("__v_b"),
         F.col("__n").alias("__n_b"),
     )
-    # per-pair dot rides the same unrolled form (`dot` fallback keeps
-    # ragged rows on zip-with-NULL semantics)
-    dp = _dot_fast(F.col("__v_a"), F.col("__v_b"), dim)
+    dp = dot(F.col("__v_a"), F.col("__v_b"))
     denom = F.col("__n_a") * F.col("__n_b")
     cos = F.when(denom != 0, F.round(dp / denom, 6))
     return (
@@ -1487,15 +1447,12 @@ def semantic_dedup_keep(
     vec_col: str = "embedding",
     cluster_col: str = "label",
     threshold: float = 0.95,
-    dim: "int | None" = None,
 ) -> DataFrame:
     """Rows surviving semantic dedup: drop any row that is the non-minimal
     side of a within-cluster pair at/above `threshold` (same greedy
-    edge-wise keep rule as the text near-dup path). `dim` forwards to
-    semantic_dedup_pairs (callers that know the vector width skip the
-    probe job)."""
+    edge-wise keep rule as the text near-dup path)."""
     dropped = (
-        semantic_dedup_pairs(df, id_col, vec_col, cluster_col, threshold, dim)
+        semantic_dedup_pairs(df, id_col, vec_col, cluster_col, threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 
 from ..caching import transient_persist
 from ..localresult import local_result_frame
-from ..functions.vectors import attach_sign_bits, cosine, dot, dot_fast, hamming64, random_hyperplanes
+from ..functions.vectors import attach_sign_bits, cosine, dot, hamming64, random_hyperplanes
 
 
 def brute_force_topk(
@@ -278,7 +278,6 @@ def ivf_batch_candidates(
     q_id_col: str = "q_id",
     q_vec_col: str = "q_vec",
     decimals: int = 6,
-    dim: "int | None" = None,
 ) -> DataFrame:
     """Batch-query IVF probe: the 100 TB SERVING shape, where ANN runs
     as a query TABLE against the indexed base rather than one driver
@@ -303,33 +302,22 @@ def ivf_batch_candidates(
     a per-query rank window (bounded by the probed cells' occupancy).
     Centroids are `label_centroids` frames (centroid_label, centroid).
     """
-    from ..functions.vectors import dot_fast
-
     if nprobe < 1:
         raise ValueError(f"ivf_batch_candidates: nprobe must be >= 1, got {nprobe}")
-    if dim is None:
-        first_d = queries.filter(F.col(q_vec_col).isNotNull()).select(
-            F.size(q_vec_col).alias("__d")
-        ).first()
-        dim = (
-            int(first_d["__d"])
-            if first_d and first_d["__d"] is not None
-            else 0
-        )
     qd = F.col(q_vec_col).cast("array<double>")
     q = queries.select(
         F.col(q_id_col),
         qd.alias("__qd"),
-        dot_fast(qd, qd, dim).alias("__q_sq"),
+        dot(qd, qd).alias("__q_sq"),
     ).filter(F.col("__q_sq") > 0)
     cent = centroids.filter(F.col("centroid_label").isNotNull()).select(
         F.col("centroid_label").alias("__code"),
         F.col("centroid").alias("__cv"),
-        dot_fast(F.col("centroid"), F.col("centroid"), dim).alias("__c_sq"),
+        dot(F.col("centroid"), F.col("centroid")).alias("__c_sq"),
     )
     dist = F.round(
         F.col("__q_sq")
-        - 2 * dot_fast(F.col("__qd"), F.col("__cv"), dim)
+        - 2 * dot(F.col("__qd"), F.col("__cv"))
         + F.col("__c_sq"),
         decimals,
     )
@@ -349,10 +337,10 @@ def ivf_batch_candidates(
         F.col(id_col),
         F.col(cell_col).alias("__bcell"),
         vd.alias("__vd"),
-        dot_fast(vd, vd, dim).alias("__v_sq"),
+        dot(vd, vd).alias("__v_sq"),
     ).filter(F.col("__v_sq") > 0)
     score = F.round(
-        dot_fast(F.col("__qd"), F.col("__vd"), dim)
+        dot(F.col("__qd"), F.col("__vd"))
         / (F.sqrt(F.col("__q_sq")) * F.sqrt(F.col("__v_sq"))),
         decimals,
     )
@@ -505,13 +493,6 @@ def kmeans_assign(
     interpreted per element, so only the unavoidable cross-term fold runs
     k times per row (3x fewer folds than the naive per-pair expression;
     identical doubles, since the same three dot products are summed).
-
-    r14 measured note: the fold deliberately stays on the zip_with +
-    aggregate HOFs here. An interleaved noop-sink A/B of this exact
-    operator (4 reps each way, one session) put the dot_fast unrolled
-    form at ~2x SLOWER inside this crossJoin + min(struct) shape
-    (steady-state 2.0-2.8s vs 0.8-1.6s at sf0.1), the OPPOSITE of its
-    plain-projection win (q317/q254/q305) -- don't "optimize" this back.
     """
     keep_cols = list(keep_cols or [])
     from .dedup import ensure_min_partitions
@@ -698,9 +679,9 @@ def pq_encode(
     # pq_encode_arrow and kmeans_assign)
     df = df.filter(F.col(vec_col).isNotNull())
     # cast the vector to array<double> BEFORE slicing so the exploded
-    # subvec attribute is already double -- dot_fast's unrolled
-    # element_at terms then reference a bare attribute instead of
-    # re-casting the array per term (the q317 double-cast lesson)
+    # subvec attribute is already double -- the dot folds then read a
+    # bare attribute instead of re-casting every subvector (the q317
+    # double-cast lesson)
     subvecs = df.select(
         id_col,
         *keep_cols,
@@ -712,13 +693,13 @@ def pq_encode(
                 ),
             )
         ).alias("sub", "subvec"),
-    ).withColumn("__v_sq", dot_fast(F.col("subvec"), F.col("subvec"), d0))
+    ).withColumn("__v_sq", dot(F.col("subvec"), F.col("subvec")))
     cb = codebooks.withColumn(
-        "__c_sq", dot_fast(F.col("codeword"), F.col("codeword"), d0)
+        "__c_sq", dot(F.col("codeword"), F.col("codeword"))
     )
     dist = F.round(
         F.col("__v_sq")
-        - 2 * dot_fast(F.col("subvec"), F.col("codeword"), d0)
+        - 2 * dot(F.col("subvec"), F.col("codeword"))
         + F.col("__c_sq"),
         decimals,
     )
@@ -779,11 +760,11 @@ def pq_adc_topk(
         ).alias("sub", "qsub")
     )
     cb = codebooks.withColumn(
-        "__c_sq", dot_fast(F.col("codeword"), F.col("codeword"), d0)
+        "__c_sq", dot(F.col("codeword"), F.col("codeword"))
     )
     dq = F.round(
-        dot_fast(F.col("qsub"), F.col("qsub"), d0)
-        - 2 * dot_fast(F.col("qsub"), F.col("codeword"), d0)
+        dot(F.col("qsub"), F.col("qsub"))
+        - 2 * dot(F.col("qsub"), F.col("codeword"))
         + F.col("__c_sq"),
         decimals,
     )
@@ -1082,11 +1063,8 @@ def mutual_nearest_pairs(
     # norms for every PAIR (3 folds/pair); precomputing leaves only the
     # dot fold pair-side (3x fewer lambda evals, arithmetic unchanged
     # -- same sqrt over the same dot, so results are bit-identical)
-    from ..functions.vectors import dot_fast as _dot_fast
     from ..functions.vectors import norm as _norm
 
-    first_d = base.select(F.size("__v").alias("__d")).first()
-    dim = int(first_d["__d"]) if first_d and first_d["__d"] is not None else 0
     a = gated.select(
         F.col("__id").alias("__ida"),
         F.col("__v").cast("array<double>").alias("__va"),
@@ -1106,7 +1084,7 @@ def mutual_nearest_pairs(
             F.round(
                 F.when(
                     denom != 0,
-                    _dot_fast(F.col("__va"), F.col("__vb"), dim) / denom,
+                    dot(F.col("__va"), F.col("__vb")) / denom,
                 ),
                 6,
             ).alias("__score"),
@@ -1174,8 +1152,8 @@ def kmeans_training_curve(
     """
     # every round reads emb twice (assign fan-out + centroid recompute)
     # plus the seed TakeOrdered -- persist the narrow projection once
-    # instead of 2*rounds+1 scans (guide §5; released by the bounded
-    # transient sweep)
+    # instead of 2*rounds+1 scans (guide §5; a registered transient,
+    # released at the next different query's entry)
     emb = (
         df.filter(F.col(vec_col).isNotNull())
         .select(id_col, vec_col)
@@ -1377,10 +1355,6 @@ def knn_label_disagreement(
             ),
         ).isNull()
     ).drop("__m")
-    from ..functions.vectors import dot_fast as _dot_fast
-
-    first_d = base.select(F.size("__v").alias("__d")).first()
-    dim = int(first_d["__d"]) if first_d and first_d["__d"] is not None else 0
     a = gated.select(
         F.col("__id").alias("__ida"),
         F.col("__l").alias("__la"),
@@ -1404,7 +1378,7 @@ def knn_label_disagreement(
             F.round(
                 F.when(
                     denom != 0,
-                    _dot_fast(F.col("__va"), F.col("__vb"), dim) / denom,
+                    dot(F.col("__va"), F.col("__vb")) / denom,
                 ),
                 6,
             ).alias("__s"),
@@ -1507,8 +1481,7 @@ def quantization_topk_overlap(
     quanted = (
         withn.withColumn("__vq", vq)
         .withColumn("__nq", _norm(F.col("__vq")))
-        # double-cast ONCE before the pair fan-out: the unrolled
-        # dot_fast terms index these arrays directly; casting inside
+        # double-cast ONCE before the pair fan-out: casting inside
         # the pair projection would re-cast per (anchor x base) row
         .withColumn("__vd", F.col("__v").cast("array<double>"))
         .withColumn("__vqd", F.col("__vq").cast("array<double>"))
@@ -1552,14 +1525,7 @@ def quantization_topk_overlap(
         )
     )
     # the pair lane is the audit's entire budget (anchors x base x TWO
-    # dot products): dot_fast unrolls the per-element fold into flat
-    # codegen arithmetic for the corpus's dimension (read once from any
-    # surviving row -- O(1) driver probe), bit-identical to the HOF dot
-    # and falling back to it on ragged rows
-    first_v = gated.select(F.size("__v").alias("__d")).first()
-    dim = int(first_v["__d"]) if first_v else 0
-    from ..functions.vectors import dot_fast as _dot_fast
-
+    # dot products)
     pairs = (
         F.broadcast(anchors)
         .join(gated, F.col("__ida") != F.col("__id"))
@@ -1568,14 +1534,14 @@ def quantization_topk_overlap(
             "__la",
             F.col("__id").alias("__idb"),
             F.round(
-                _dot_fast(F.col("__vda"), F.col("__vd"), dim)
+                dot(F.col("__vda"), F.col("__vd"))
                 / (F.col("__na") * F.col("__nrm")),
                 6,
             ).alias("__sf"),
             F.when(
                 (F.col("__nqa") > 0) & (F.col("__nq") > 0),
                 F.round(
-                    _dot_fast(F.col("__vqda"), F.col("__vqd"), dim)
+                    dot(F.col("__vqda"), F.col("__vqd"))
                     / (F.col("__nqa") * F.col("__nq")),
                     6,
                 ),

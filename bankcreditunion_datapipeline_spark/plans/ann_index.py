@@ -93,16 +93,16 @@ def ann_query(
     reaches the executors is the broadcast codeword table; the probed
     partitions contribute only (id, codes) rows.
     """
-    from ..functions.vectors import dot_fast
+    from ..functions.vectors import dot
 
     keep_cols = list(keep_cols or [])
     cent = spark.read.parquet(os.path.join(index_dir, "centroids"))
     cb = spark.read.parquet(os.path.join(index_dir, "codebooks"))
 
     qdist = F.round(
-        dot_fast(F.col("qvec"), F.col("qvec"), dim)
-        - 2 * dot_fast(F.col("qvec"), F.col("centroid"), dim)
-        + dot_fast(F.col("centroid"), F.col("centroid"), dim),
+        dot(F.col("qvec"), F.col("qvec"))
+        - 2 * dot(F.col("qvec"), F.col("centroid"))
+        + dot(F.col("centroid"), F.col("centroid")),
         6,
     )
     probes = [

@@ -91,7 +91,7 @@ def curate_documents(
 
     def pin(df: DataFrame) -> DataFrame:
         # tracked transient (caching.py): warm for the caller's collects,
-        # released by the bounded query-boundary sweep instead of LRU luck
+        # released at the next different query's entry instead of LRU luck
         df = transient_persist(df)
         pinned.append(df)
         return df

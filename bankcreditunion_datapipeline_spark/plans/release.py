@@ -48,7 +48,6 @@ from ..caching import transient_persist
 from ..localresult import local_result_frame
 from ..operators.dedup import (
     connected_components_star,
-    embedding_dim,
     ensure_min_partitions,
     exact_dedup_keep_min,
     minhash_near_dup_pairs,
@@ -204,7 +203,7 @@ def _survivors(
     `persist_fn` overrides how the pair graph is persisted: callers
     whose pairs scan MUTABLE inputs (streaming_release_manifest's state
     dirs) pass their own pin hook so the cache is released before the
-    extraction returns -- a bounded-sweep transient would outlive the
+    extraction returns -- a registered transient would outlive the
     call and serve stale rows to the next extraction."""
     import time as _time
 
@@ -591,16 +590,12 @@ def release_corpus(
             ),
             id_col,
         )
-        # probe the vector width from the embeddings SCAN (not the
-        # survivors join): the width is corpus metadata, and probing the
-        # joined frame would run the join once just to read one size
         sem_pairs = semantic_dedup_pairs(
             emb,
             id_col=id_col,
             vec_col=vec_col,
             cluster_col=block_col,
             threshold=semantic_threshold,
-            dim=embedding_dim(embeddings, vec_col),
         ).select("id_a", "id_b")
         cur = record(
             "semantic_dedup",

@@ -46,8 +46,8 @@ def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     timings: dict[str, float] = {}
     # storage-cache high-water mark across the run (VERDICT r13 #3): the
-    # bounded transient sweep (caching.py) is the policy; this records the
-    # measurement SCALE.md cites. One py4j introspection call per query --
+    # query-change transient release (caching.py) is the policy; this
+    # records the measurement SCALE.md cites. One py4j introspection call per query --
     # microseconds, never on a query plan path.
     from bankcreditunion_datapipeline_spark.caching import storage_status
 

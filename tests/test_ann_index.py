@@ -158,7 +158,7 @@ def test_batch_probe_gets_dynamic_partition_pruning(spark, tmp_path):
     queries = emb.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    out = ivf_batch_candidates(persisted, cent, queries, nprobe=2, dim=64)
+    out = ivf_batch_candidates(persisted, cent, queries, nprobe=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan[:2000]
     got = sorted(
@@ -168,7 +168,7 @@ def test_batch_probe_gets_dynamic_partition_pruning(spark, tmp_path):
     want = sorted(
         (r["q_id"], r["cell_rank"], r["vec_id"], r["score"])
         for r in ivf_batch_candidates(
-            base, cent, queries, nprobe=2, dim=64
+            base, cent, queries, nprobe=2
         ).collect()
     )
     assert got == want and len(got) > 0

@@ -289,6 +289,45 @@ def test_semantic_dedup_cluster_blocked(spark):
     assert kept == [1, 3, 4, 5]  # 2 dropped; 4 survives via cluster blocking
 
 
+def test_semantic_dedup_pairs_builds_without_a_job(spark):
+    # building the plan is lazy: no width probe or other action runs
+    # before the caller's own action
+    from bankcreditunion_datapipeline_spark.operators.dedup import (
+        semantic_dedup_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [0.999, 0.01], 0)],
+        ["vec_id", "embedding", "label"],
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("semantic-dedup-build", "plan construction only")
+    try:
+        semantic_dedup_pairs(df, threshold=0.95)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("semantic-dedup-build") == []
+
+
+def test_ngram_jaccard_pairs_identical_and_disjoint(spark):
+    from bankcreditunion_datapipeline_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+    )
+
+    # doc 7 shares no character 5-gram with any other doc
+    disjoint = spark.createDataFrame(
+        [(7, "0123 4567 8901 2345 6789")], "doc_id long, text string"
+    )
+    threshold = 0.6
+    pairs = ngram_jaccard_pairs(
+        _docs(spark).union(disjoint), threshold=threshold
+    ).collect()
+    sims = {(r.id_a, r.id_b): r.jaccard_sim for r in pairs}
+    assert sims[(1, 6)] == 1.0  # identical docs
+    assert not any(7 in pair for pair in sims)
+    assert all(s >= threshold for s in sims.values())
+
+
 def test_connected_components_star_matches_propagation(spark):
     from bankcreditunion_datapipeline_spark.operators.dedup import (
         connected_components,

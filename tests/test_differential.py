@@ -318,3 +318,22 @@ def test_q37_hash_ignores_part_row_order(spark, tmp_path):
         hashes.add(frame_hash(con.sql(q.oracle).df()))
     hashes.add(frame_hash(q.spark_fn(spark, "/root/testdata/sf0.001").toPandas()))
     assert len(hashes) == 1
+
+
+def test_q189_hash_same_without_broadcast(spark, sf_dir):
+    # q189's recall join leaves the broadcast-vs-shuffle choice to the
+    # planner; the shuffle arm (broadcast disabled) must give the same
+    # result as the default session
+    from bankcreditunion_datapipeline_spark.queries import registry
+    from tools.check_correctness import frame_hash
+
+    q = registry()["q189_lsh_recall_audit"]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = frame_hash(q.spark_fn(spark, sf_dir).toPandas())
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffled = frame_hash(q.spark_fn(spark, sf_dir).toPandas())
+    finally:
+        spark.conf.set(key, old)
+    assert shuffled == default

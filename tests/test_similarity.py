@@ -677,7 +677,7 @@ def test_ivf_batch_topk_all_cells_equals_brute_force(spark):
     got = {
         (r["q_id"], r["rank"]): r["vec_id"]
         for r in ivf_batch_topk(
-            base, cent, queries, k=5, nprobe=99, dim=8
+            base, cent, queries, k=5, nprobe=99
         ).collect()
     }
     # driver-side brute force truth
@@ -718,8 +718,8 @@ def test_ivf_batch_candidates_nprobe_monotone_and_zero_norm_excluded(spark):
     queries = emb.select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    c1 = ivf_batch_candidates(base, cent, queries, nprobe=1, dim=2)
-    c2 = ivf_batch_candidates(base, cent, queries, nprobe=2, dim=2)
+    c1 = ivf_batch_candidates(base, cent, queries, nprobe=1)
+    c2 = ivf_batch_candidates(base, cent, queries, nprobe=2)
     s1 = {(r["q_id"], r["vec_id"]) for r in c1.collect()}
     s2 = {(r["q_id"], r["vec_id"]) for r in c2.collect()}
     assert s1 < s2  # wider probe strictly adds candidates here
