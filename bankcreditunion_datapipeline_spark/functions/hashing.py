@@ -1,10 +1,10 @@
 """Portable (cross-engine) hash lanes.
 
-The production near-dup paths hash with ``xxhash64`` -- the fastest
-string hash Spark ships, but one DuckDB does not implement, so queries
-built on it can only be rows-only checked. Both engines DO implement
-``md5`` over identical UTF-8 bytes, so a 60-bit lane sliced from the md5
-hex digest is a hash the DuckDB oracle can replay term for term:
+The near-dup operators (MinHash, SimHash) hash on ONE lane, md5. Spark's
+fastest string hash, ``xxhash64``, has no DuckDB twin, so a query built
+on it could only be rows-only checked. Both engines DO implement ``md5``
+over identical UTF-8 bytes, so a 60-bit lane sliced from the md5 hex
+digest is a hash the DuckDB oracle can replay term for term:
 
     Spark:  conv(substr(md5(x), 1, 15), 16, 10)  cast to long
     DuckDB: CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)
@@ -13,9 +13,8 @@ hex digest is a hash the DuckDB oracle can replay term for term:
 both engines (no sign-extension edge to diverge on). md5's avalanche is
 cryptographic, so a 60-bit slice is uniform -- statistically as good a
 MinHash / SimHash base as xxhash64, at roughly 3-4x the compute. That
-cost buys hash-level verifiability: q21/q22 grade the md5 lane while the
-``hash="xxhash64"`` paths stay the 100 TB default.
-"""
+cost buys hash-level verifiability: q21/q22 and every near-dup consumer
+grade against the oracle."""
 
 from __future__ import annotations
 

@@ -2,12 +2,13 @@
 `embeddings`: exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine.
 
 Scale design:
-- Everything is expressed with JVM array/hash built-ins (xxhash64, transform,
-  aggregate, array_min, explode) -- no Python UDFs, so signatures compute
-  inside whole-stage codegen and the only shuffles are the LSH bucket
-  group-joins, which are equi-joins on small keys (band hash) that AQE can
-  size. Pairwise comparison happens ONLY within LSH buckets -- never a
-  cross join -- so cost is O(candidates), not O(n^2).
+- MinHash and SimHash hash on ONE lane: the portable md5 lane
+  (functions/hashing.py), which a DuckDB oracle replays term for term.
+  Signatures are JVM built-ins over flat (id, digest) tables (md5,
+  explode, grouped min) -- no Python UDFs -- and the only shuffles are the
+  LSH bucket group-joins, equi-joins on the band key that AQE can size.
+  Pairwise comparison happens ONLY within LSH buckets -- never a cross
+  join -- so cost is O(candidates), not O(n^2).
 - Near-dup "keep one" semantics: greedy edge-wise -- a document is dropped
   iff it is the non-minimal side of some duplicate pair. For chains
   a~b~c (a!~c), b and c are dropped and a kept; i.e. the kept set is the
@@ -21,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import transient_persist
+from ..functions.hashing import md5lane
 from ..functions.vectors import attach_sign_bits, cosine, dot, hamming64, random_hyperplanes
 
 def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -196,31 +198,6 @@ def word_shingles_flat(
     return out if with_pos else out.drop("__pos")
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature (array<long>, length num_hashes).
-
-    Cost shape: each shingle STRING is hashed exactly once (xxhash64); the
-    num_hashes family is then derived by re-hashing that 8-byte long with
-    the function index (xxhash64(i, h)) -- string bytes are not re-scanned
-    per hash function, which is the dominant cost at 100 TB.
-    """
-    return minhash_signature_from_hashes(
-        F.transform(shingles, lambda s: F.xxhash64(s)), num_hashes
-    )
-
-
-def minhash_signature_from_hashes(hashes: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature from pre-hashed shingles (array<long>). Materialize
-    the base hash as its own column first so the string scan isn't repeated
-    per hash function."""
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, lambda h, i=i: F.xxhash64(F.lit(i), h)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def portable_minhash_signatures(
     flat: DataFrame, id_col: str, num_hashes: int = 32
 ) -> DataFrame:
@@ -278,97 +255,26 @@ def portable_minhash_signatures(
     )
 
 
-def _splitmix64(x):
-    """Vectorized splitmix64 finalizer over a uint64 numpy array."""
-    import numpy as np
-
-    x = x + np.uint64(0x9E3779B97F4A7C15)
-    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return x ^ (x >> np.uint64(31))
-
-
-def attach_minhash_from_hashes(
-    df: DataFrame, hashes_col: str, num_hashes: int = 32, out: str = "__sig"
-) -> DataFrame:
-    """Arrow-batched MinHash: derive the num_hashes family from the 8-byte
-    base hashes with vectorized splitmix64 mixing, per-row mins via ONE
-    `minimum.reduceat` over the batch's concatenated hash arrays per
-    function -- no per-row Python and no interpreted HOF lambda per hash
-    function (the expression form re-walks each array num_hashes times,
-    interpreted; this is the scale path). The string scan stays JVM-side
-    (xxhash64 in `word_shingles` callers); only int64 arrays cross Arrow.
-    """
-    import numpy as np
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-    seeds = _splitmix64(np.arange(1, num_hashes + 1, dtype=np.uint64))
-    schema = StructType(list(df.schema.fields) + [StructField(out, ArrayType(LongType()))])
-
-    def fn(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            # NULL hash arrays (e.g. a document with NULL text) must yield a
-            # NULL signature, not kill the job -- same contract as simhash.
-            rows = [
-                np.asarray(h, dtype=np.int64) if h is not None else None
-                for h in pdf[hashes_col]
-            ]
-            lens = np.asarray([len(r) if r is not None else 0 for r in rows])
-            valid = np.asarray([r is not None for r in rows])
-            keep = valid & (lens > 0)
-            flat = (
-                np.concatenate([r for r, k in zip(rows, keep) if k])
-                if keep.any()
-                else np.empty(0, dtype=np.int64)
-            ).astype(np.uint64)
-            starts = np.zeros(int(keep.sum()), dtype=np.int64)
-            if len(starts) > 1:
-                starts[1:] = np.cumsum(lens[keep])[:-1]
-            sigs = np.zeros((n, num_hashes), dtype=np.uint64)
-            for i, seed in enumerate(seeds):
-                mixed = _splitmix64(flat ^ seed)
-                if len(starts):
-                    sigs[keep, i] = np.minimum.reduceat(mixed, starts)
-            signed = sigs.astype(np.int64)
-            pdf[out] = [
-                list(signed[j]) if valid[j] else None for j in range(n)
-            ]
-            yield pdf
-
-    return df.mapInPandas(fn, schema)
-
-
 def lsh_band_table(
     df: DataFrame,
     id_col: str,
     sig_col: str = "minhash",
     bands: int = 8,
-    band_hasher=None,
 ) -> DataFrame:
     """Explode a minhash signature into (id, band_id, band_hash) rows.
 
     Two documents share a bucket iff one band of their signatures matches
-    exactly -- the classic (b bands x r rows) S-curve. With the default
-    xxhash64 hasher the bucket key is a single long, so the subsequent
-    self-join shuffles 16-byte keys; on the portable md5 path the key is
-    a 32-char hex string (~40+ byte rows -- the portability tax the q21
-    oracle lane pays, production keeps xxhash64).
-
-    `band_hasher` (Column -> Column over the joined band string) defaults
-    to xxhash64; the portable q21 path passes functions.hashing.md5lane.
+    exactly -- the classic (b bands x r rows) S-curve. The bucket key is
+    the md5 hex of the band's comma-joined terms, a 32-char string that
+    the DuckDB oracle computes with the same md5 call.
     """
-    if band_hasher is None:
-        band_hasher = F.xxhash64
     sig = F.col(sig_col)
     r = F.size(sig) / bands  # rows per band (validated by caller)
     band_structs = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.struct(
             b.alias("band_id"),
-            band_hasher(
+            F.md5(
                 F.concat_ws(",", F.transform(F.slice(sig, (b * r + 1).cast("int"), r.cast("int")), lambda x: x.cast("string")))
             ).alias("band_hash"),
         ),
@@ -415,17 +321,15 @@ def minhash_near_dup_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 3,
-    hash: str = "xxhash64",
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle -> signature -> band ->
     bucket-join -> exact-Jaccard verify. Returns (id_a, id_b, jaccard_sim)
     for verified pairs; only candidate pairs are ever compared exactly.
 
-    ``hash`` picks the lane: "xxhash64" (default -- fastest, Arrow-batched
-    splitmix64 family, the 100 TB path) or "md5" (functions/hashing.py
-    60-bit md5 lanes + md5-derived family/band keys, every term replayable
-    in DuckDB SQL -- the hash-verifiable path graded by q21). Identical
-    pipeline shape either way; only the lane functions differ.
+    Every term rides the portable md5 lane (functions/hashing.py): md5
+    shingle digests, the md5-derived family of
+    portable_minhash_signatures and md5 band keys, all replayable in
+    DuckDB SQL -- the path the q21 oracle grades.
 
     The verify threshold is applied as an INTEGER inequality
     (den*inter >= num*union with num/den = round(threshold*10000)/10000),
@@ -433,42 +337,25 @@ def minhash_near_dup_pairs(
     at 1e-6 (the engine-portable division discipline, SCALE.md).
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
-    assert hash in ("xxhash64", "md5")
-    # One narrow pass computes shingles + signature; persisted because three
-    # downstream branches (band table, verify-a, verify-b) would otherwise
-    # re-shingle the corpus. At 100 TB this is a checkpointed table.
-    if hash == "md5":
-        # Flat-table pipeline: relational shingling (word_shingles_flat),
-        # full-hex md5 base digests on a flat string column (whole-stage
-        # codegen; the array-HOF transform evaluates interpreted),
-        # signatures via the two-level grouped mins in
-        # portable_minhash_signatures, verify arrays reassembled by one
-        # collect_list. Band keys are md5 hex of the joined band string.
-        # Docs with empty/NULL text contribute no shingle rows -- same
-        # exclusion as the xxhash64 path's NULL-signature filter.
-        band_hasher = F.md5
-        flat = transient_persist(
-            word_shingles_flat(ensure_min_partitions(df), id_col, text_col, shingle_k)
-            .select(F.col(id_col), F.md5(F.col("__s")).alias("__h"))
-        )
-        bands_src = portable_minhash_signatures(flat, id_col, num_hashes)
-        sigs = flat.groupBy(id_col).agg(F.collect_list("__h").alias("__hashes"))
-    else:
-        band_hasher = F.xxhash64
-        shingled = (
-            ensure_min_partitions(df)
-            .select(F.col(id_col), word_shingles(F.col(text_col), shingle_k).alias("__sh"))
-            .withColumn("__hashes", F.transform(F.col("__sh"), lambda s: F.xxhash64(s)))
-            .select(id_col, "__hashes")
-        )
-        sigs = transient_persist(
-            attach_minhash_from_hashes(shingled, "__hashes", num_hashes, "__sig")
-        )
-        bands_src = sigs.filter(F.col("__sig").isNotNull())
-    bands_t = lsh_band_table(bands_src, id_col, "__sig", bands, band_hasher)
+    # Flat-table pipeline: relational shingling (word_shingles_flat),
+    # full-hex md5 base digests on a flat string column (whole-stage
+    # codegen; the array-HOF transform evaluates interpreted), signatures
+    # via the two-level grouped mins in portable_minhash_signatures,
+    # verify arrays reassembled by one collect_list. The digest table is
+    # persisted because three downstream branches (band table, verify-a,
+    # verify-b) would otherwise re-shingle the corpus; at 100 TB this is a
+    # checkpointed table. Docs with empty/NULL text contribute no shingle
+    # rows, so they get no signature and no pairs.
+    flat = transient_persist(
+        word_shingles_flat(ensure_min_partitions(df), id_col, text_col, shingle_k)
+        .select(F.col(id_col), F.md5(F.col("__s")).alias("__h"))
+    )
+    bands_src = portable_minhash_signatures(flat, id_col, num_hashes)
+    sigs = flat.groupBy(id_col).agg(F.collect_list("__h").alias("__hashes"))
+    bands_t = lsh_band_table(bands_src, id_col, "__sig", bands)
     cands = candidate_pairs(bands_t, id_col)
-    # Verify on the hashed shingle sets (longs), not the string arrays --
-    # same Jaccard (the 60+-bit lanes are injective in practice), smaller rows.
+    # Verify on the shingle digest sets, not the string arrays -- same
+    # Jaccard (md5 is injective in practice), fixed-width rows.
     num = int(round(threshold * 10000))
     a = sigs.select(F.col(id_col).alias("id_a"), F.array_distinct("__hashes").alias("__h_a"))
     b = sigs.select(F.col(id_col).alias("id_b"), F.array_distinct("__hashes").alias("__h_b"))
@@ -666,70 +553,27 @@ def connected_components(pairs: DataFrame, max_iters: int = 10) -> DataFrame:
 # SimHash
 # ---------------------------------------------------------------------------
 
-
-def simhash(text: Column, prefix_bits: int = 16) -> Column:
-    """64-bit SimHash packed into a long, computed JVM-side.
-
-    Per-bit majority vote over token hashes via F.aggregate with an
-    array<int> accumulator (bit b of token hash set -> +1 else -1), then
-    packed. No shuffle, no Python.
-    """
-    tokens = F.array_distinct(F.split(F.lower(F.trim(text)), r"\s+"))
-    hashes = F.transform(tokens, lambda tok: F.xxhash64(tok))
-    zero = F.array_repeat(F.lit(0), 64)
-    # Bit positions are driver-side constants, so the per-bit expressions are
-    # unrolled in Python (shift amounts must be ints, not Columns).
-    votes = F.aggregate(
-        hashes,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-                    for b in range(64)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    powers = F.array(*[F.lit(1 << b).cast("long") for b in range(63)] + [F.lit(-(1 << 63)).cast("long")])
-    return F.aggregate(
-        F.zip_with(votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+_SIMHASH_BITS = 60  # one md5 lane: a non-negative long on both engines
 
 
 def attach_simhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    out: str = "__sim",
-    token_hasher=None,
-    bits: int = 64,
+    df: DataFrame, id_col: str, text_col: str, out: str = "__sim"
 ) -> DataFrame:
     """(id, simhash) via the Arrow-batched scale path. Tokenization and the
-    one string hash stay JVM-side (identical to `simhash`: distinct
-    whitespace tokens -> xxhash64 by default); the `bits`-wide majority
+    one string hash stay JVM-side: distinct whitespace tokens, each hashed
+    to a 60-bit md5 lane (functions.hashing.md5lane). The 60-bit majority
     vote runs as vectorized numpy over the batch's concatenated token
     hashes (one add.reduceat per bit) instead of a wide interpreted
-    zip_with per token. Bit-identical to the expression form: bit b set
-    iff strictly more token hashes have bit b set than clear.
-
-    The portable q22 path passes token_hasher=functions.hashing.md5lane
-    with bits=60: 60-bit lanes are non-negative longs whose per-bit
-    extraction ((h >> b) & 1) a DuckDB oracle replays without sign-bit
-    casework, so the whole signature is SQL-twinnable."""
+    zip_with per token: bit b is set iff strictly more token hashes have
+    bit b set than clear. 60-bit lanes are non-negative longs whose
+    per-bit extraction ((h >> b) & 1) a DuckDB oracle replays without
+    sign-bit casework, so the whole signature is SQL-twinnable (q22)."""
     import numpy as np
     from pyspark.sql.types import LongType, StructField, StructType
 
-    if token_hasher is None:
-        token_hasher = F.xxhash64
-    assert 0 < bits <= 64
     tokens = F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
     hashed = df.select(
-        F.col(id_col), F.transform(tokens, lambda t: token_hasher(t)).alias("__th")
+        F.col(id_col), F.transform(tokens, md5lane).alias("__th")
     )
     schema = StructType([hashed.schema[id_col], StructField(out, LongType())])
 
@@ -758,7 +602,7 @@ def attach_simhash(
             if len(starts):
                 vlens = lens[valid].astype(np.int64)
                 packed = np.zeros(len(starts), dtype=np.uint64)
-                for b in range(bits):
+                for b in range(_SIMHASH_BITS):
                     ones = ((flat >> np.uint64(b)) & np.uint64(1)).astype(np.int64)
                     counts = np.add.reduceat(ones, starts)
                     packed |= (2 * counts > vlens).astype(np.uint64) << np.uint64(b)
@@ -776,30 +620,19 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     chunks: int = 4,
-    hash: str = "xxhash64",
 ) -> DataFrame:
     """SimHash near-dup pairs via pigeonhole blocking: hamming(a,b) <= k
     implies at least one of (k+1) signature chunks matches exactly, so the
     join is an equi-join on (chunk_id, chunk_value) -- never a cross join.
-    Returns (id_a, id_b, hamming) verified pairs.
-
-    ``hash``: "xxhash64" (64-bit signature, fastest) or "md5" (60-bit
-    portable lanes, every bit-vote replayable in DuckDB SQL -- the q22
-    graded path; see functions/hashing.py).
+    Returns (id_a, id_b, hamming) verified pairs over the 60-bit md5-lane
+    signatures of attach_simhash (the q22 graded path).
     """
     assert chunks > max_hamming, "need chunks > max_hamming for pigeonhole completeness"
-    assert hash in ("xxhash64", "md5")
-    if hash == "md5":
-        from ..functions.hashing import md5lane
-
-        token_hasher, bits = md5lane, 60
-    else:
-        token_hasher, bits = F.xxhash64, 64
-    bits_per = bits // chunks
+    bits_per = _SIMHASH_BITS // chunks
     # persist: the signature feeds both join sides; recomputing it doubles
     # the dominant cost.
     sigd = attach_simhash(
-        ensure_min_partitions(df), id_col, text_col, "__sim", token_hasher, bits
+        ensure_min_partitions(df), id_col, text_col, "__sim"
     ).transform(transient_persist)
     chunk_structs = F.array(
         *[
@@ -937,18 +770,24 @@ def ngram_jaccard_pairs(
     num_hashes: int = 32,
     bands: int = 8,
 ) -> DataFrame:
-    """Character-n-gram Jaccard near-dups, LSH-blocked (same minhash/band
-    machinery, character shingles instead of word shingles)."""
-    grams = (
+    """Character-n-gram Jaccard near-dups, LSH-blocked on the md5 lane of
+    minhash_near_dup_pairs with character n-grams instead of word
+    shingles: a flat (id, md5(gram)) table, portable_minhash_signatures,
+    md5 band keys. Returns (id_a, id_b, jaccard_sim) with jaccard_sim
+    exact over the distinct digest sets, rounded to 1e-6 and
+    >= threshold. NULL text has no n-grams, so it gets no pairs."""
+    assert num_hashes % bands == 0, "bands must divide num_hashes"
+    flat = transient_persist(
         ensure_min_partitions(df)
-        .select(F.col(id_col), char_ngrams(F.col(text_col), n).alias("__sh"))
-        .withColumn("__hashes", F.transform(F.col("__sh"), lambda s: F.xxhash64(s)))
-        .select(id_col, "__hashes")
+        .select(F.col(id_col), F.explode(char_ngrams(F.col(text_col), n)).alias("__g"))
+        .select(F.col(id_col), F.md5(F.col("__g")).alias("__h"))
+        .filter(F.col("__h").isNotNull())
     )
-    sigs = attach_minhash_from_hashes(grams, "__hashes", num_hashes, "__sig").transform(transient_persist)
+    sigs = portable_minhash_signatures(flat, id_col, num_hashes)
     cands = candidate_pairs(lsh_band_table(sigs, id_col, "__sig", bands), id_col)
-    a = sigs.select(F.col(id_col).alias("id_a"), F.col("__hashes").alias("__h_a"))
-    b = sigs.select(F.col(id_col).alias("id_b"), F.col("__hashes").alias("__h_b"))
+    sets = flat.groupBy(id_col).agg(F.collect_set("__h").alias("__hs"))
+    a = sets.select(F.col(id_col).alias("id_a"), F.col("__hs").alias("__h_a"))
+    b = sets.select(F.col(id_col).alias("id_b"), F.col("__hs").alias("__h_b"))
     return (
         cands.join(a, "id_a")
         .join(b, "id_b")
@@ -1272,36 +1111,24 @@ def build_minhash_index(
     text_col: str = "text",
     num_hashes: int = 32,
     shingle_k: int = 3,
-    hash: str = "xxhash64",
 ) -> DataFrame:
     """Persistable dedup index: (id, __hashes, __sig) per document. The
     100 TB dedup workflow is NOT re-pairing the whole corpus per run -- you
     build this index once, write it (bucketed by id or partitioned by band
     via lsh_band_table), and dedup each arriving delta against it.
 
-    ``hash`` picks the lane exactly as in minhash_near_dup_pairs:
-    "xxhash64" (production) or "md5" (the SQL-replayable q21 family) --
-    an index and the deltas paired against it must ride ONE lane.
+    Same md5 lane as minhash_near_dup_pairs (shingle digests, family and
+    band keys), so an index pairs with its deltas exactly as a monolithic
+    run pairs the union.
     """
-    assert hash in ("xxhash64", "md5")
-    if hash == "md5":
-        flat = word_shingles_flat(
-            ensure_min_partitions(df), id_col, text_col, shingle_k
-        ).select(F.col(id_col), F.md5(F.col("__s")).alias("__h"))
-        sigs = portable_minhash_signatures(flat, id_col, num_hashes)
-        hashes = flat.groupBy(id_col).agg(
-            F.array_distinct(F.collect_list("__h")).alias("__hashes")
-        )
-        return sigs.join(hashes, id_col).select(id_col, "__hashes", "__sig")
-    shingled = (
-        ensure_min_partitions(df)
-        .select(F.col(id_col), word_shingles(F.col(text_col), shingle_k).alias("__sh"))
-        .withColumn("__hashes", F.transform(F.col("__sh"), lambda s: F.xxhash64(s)))
-        .select(id_col, "__hashes")
+    flat = word_shingles_flat(
+        ensure_min_partitions(df), id_col, text_col, shingle_k
+    ).select(F.col(id_col), F.md5(F.col("__s")).alias("__h"))
+    sigs = portable_minhash_signatures(flat, id_col, num_hashes)
+    hashes = flat.groupBy(id_col).agg(
+        F.array_distinct(F.collect_list("__h")).alias("__hashes")
     )
-    return attach_minhash_from_hashes(shingled, "__hashes", num_hashes, "__sig").select(
-        id_col, F.array_distinct("__hashes").alias("__hashes"), "__sig"
-    )
+    return sigs.join(hashes, id_col).select(id_col, "__hashes", "__sig")
 
 
 def incremental_near_dup_pairs(
@@ -1313,28 +1140,19 @@ def incremental_near_dup_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 3,
-    index_bands: DataFrame | None = None,
-    hash: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs between a new delta and an existing index: returns
     (new_id, index_id, jaccard_sim). Only the delta is shingled; the index
-    side reuses stored signatures (pass `index_bands` if the band table is
-    also persisted -- then the index side does zero signature work and the
-    candidate join can partition-prune on band_hash). ``hash`` must match
-    the lane the index was built with (build_minhash_index).
+    side reuses the stored signatures of build_minhash_index.
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
-    assert hash in ("xxhash64", "md5")
-    band_hasher = F.md5 if hash == "md5" else F.xxhash64
     new_sigs = build_minhash_index(
-        new_df, id_col, text_col, num_hashes, shingle_k, hash=hash
+        new_df, id_col, text_col, num_hashes, shingle_k
     ).transform(transient_persist)
-    new_bands = lsh_band_table(new_sigs, id_col, "__sig", bands, band_hasher).select(
+    new_bands = lsh_band_table(new_sigs, id_col, "__sig", bands).select(
         F.col("band_id"), F.col("band_hash"), F.col(id_col).alias("new_id")
     )
-    if index_bands is None:
-        index_bands = lsh_band_table(index_sigs, id_col, "__sig", bands, band_hasher)
-    idx_bands = index_bands.select(
+    idx_bands = lsh_band_table(index_sigs, id_col, "__sig", bands).select(
         F.col("band_id"), F.col("band_hash"), F.col(id_col).alias("index_id")
     )
     cands = (

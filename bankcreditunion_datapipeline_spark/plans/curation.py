@@ -48,7 +48,7 @@ def curate_documents(
     count_stages: bool = True,
     strip_boilerplate: bool = False,
     group_col: str = "source",
-    near_dup_hash: str = "xxhash64",
+    near_dup_hash: str = "md5",
     near_dup_hashes: int = 32,
     near_dup_bands: int = 8,
     remove_spans: bool = False,
@@ -56,7 +56,9 @@ def curate_documents(
 ) -> CurationResult:
     """Run the curation funnel. `count_stages=False` skips the per-stage
     counts for production runs where only the final tables matter; the
-    funnel then reports -1 per skipped stage.
+    funnel then reports -1 per skipped stage. `near_dup_hash` accepts
+    only "md5", the one near-dup hash lane; any other value raises
+    ValueError.
 
     Why persist-and-count rather than `df.observe()`: measured on this
     engine, plans DERIVED from an observed-and-persisted DataFrame do not
@@ -73,6 +75,10 @@ def curate_documents(
     persists for checkpoints to the staging store. Caches are deliberately
     left warm for the caller's subsequent collects.
     """
+    if near_dup_hash != "md5":
+        raise ValueError(
+            f"near_dup_hash={near_dup_hash!r}: md5 is the only near-dup hash lane"
+        )
     funnel: dict[str, int] = {}
     pinned: list[DataFrame] = []
 
@@ -176,9 +182,8 @@ def curate_documents(
             ),
         )
 
-    # near_dup_hash="md5" swaps in the portable lane (functions/hashing)
-    # so the whole funnel is SQL-twinnable -- the q49 oracle; xxhash64
-    # stays the production default.
+    # the md5 lane (functions/hashing) keeps the whole funnel
+    # SQL-twinnable -- the q49 oracle
     pairs = minhash_near_dup_pairs(
         exact,
         id_col=id_col,
@@ -186,7 +191,6 @@ def curate_documents(
         threshold=near_dup_threshold,
         num_hashes=near_dup_hashes,
         bands=near_dup_bands,
-        hash=near_dup_hash,
     )
     near = stage("near_dedup", drop_near_dups(exact, pairs, id_col))
 

@@ -243,6 +243,8 @@ def gold_fact(silver: DataFrame) -> DataFrame:
 
 
 def _gold_pivot(silver: DataFrame, measure_col: str, quarters: list[str] | None) -> DataFrame:
+    # pivot_by_period resolves from module globals at call time, so a
+    # tracer that patches it on this module sees every gold pivot
     df = silver.withColumn("q", F.date_format("quarter_date", "yyyy-MM-dd"))
     pv = pivot_by_period(
         df,
@@ -258,18 +260,12 @@ def gold_quarterly_assets(silver: DataFrame, quarters: list[str] | None = None) 
     """quarterly_assets_table (:183-194) -- data-named quarter columns,
     newest first; ONE shuffle via pivot (vs the reference's O(Q) join loop).
     Pass `quarters` explicitly at scale to skip the distinct pre-pass."""
-    return gold_quarterly_pivot(silver, "assets_total", quarters)
+    return _gold_pivot(silver, "assets_total", quarters)
 
 
 def gold_quarterly_deposits(silver: DataFrame, quarters: list[str] | None = None) -> DataFrame:
     """quarterly_deposits_table (:197-209)."""
-    return gold_quarterly_pivot(silver, "deposits_total", quarters)
-
-
-def gold_quarterly_pivot(
-    silver: DataFrame, measure_col: str, quarters: list[str] | None = None
-) -> DataFrame:
-    return _gold_pivot(silver, measure_col, quarters)
+    return _gold_pivot(silver, "deposits_total", quarters)
 
 
 def run_gold(silver: DataFrame, out_dir: str, quarters: list[str] | None = None) -> None:

@@ -347,7 +347,7 @@ def release_corpus(
     min_quality: float = 0.2,
     length_quantile: float = 0.95,
     near_dup_threshold: float = 0.7,
-    near_dup_hash: str = "xxhash64",
+    near_dup_hash: str = "md5",
     near_dup_hashes: int = 16,
     near_dup_bands: int = 8,
     emb_id_col: str = "vec_id",
@@ -365,7 +365,7 @@ def release_corpus(
     front: "tuple[DataFrame, dict] | None" = None,
     near_pairs: DataFrame | None = None,
     near_pairs_lane_threshold: float | None = None,
-    near_pairs_lane_family: "tuple[str, int, int] | None" = None,
+    near_pairs_lane_family: "tuple[int, int] | None" = None,
     sem_pairs: DataFrame | None = None,
     sem_pairs_lane_threshold: float | None = None,
     cc_memo=None,
@@ -387,7 +387,7 @@ def release_corpus(
 
     - `near_pairs`: verified MinHash pairs (id_a, id_b, jaccard_sim)
       over the front's exact docs, built with the SAME
-      (hash, num_hashes, bands, shingle) family at a verify threshold
+      (num_hashes, bands, shingle) family at a verify threshold
       <= every configuration's `near_dup_threshold`.  This call
       refilters ``jaccard_sim >= near_dup_threshold`` -- exactly the
       integer verify cut, because jaccard_sim is floor-truncated at
@@ -415,11 +415,13 @@ def release_corpus(
     the [0.6, 0.7) pairs a 0.6 configuration needs, and silently
     missing them would corrupt the graded manifest.  The near lane's
     identity ALSO includes its MinHash family: pass
-    ``near_pairs_lane_family=(hash, num_hashes, bands)`` and this call
-    raises when the configuration's (near_dup_hash, near_dup_hashes,
-    near_dup_bands) differ -- a 16x8 md5 lane's candidate set is not a
-    16-band xxhash64 one, and the threshold guard alone cannot see
-    that.  The sem lane's remaining identity (WHICH embeddings frame
+    ``near_pairs_lane_family=(num_hashes, bands)`` and this call raises
+    when the configuration's (near_dup_hashes, near_dup_bands) differ --
+    a 16x8 lane's candidate set is not a 16x4 one, and the threshold
+    guard alone cannot see that.  Every lane hashes on md5, the one
+    near-dup hash lane, so the hash is not part of the identity;
+    `near_dup_hash` accepts only "md5" and any other value raises
+    ValueError.  The sem lane's remaining identity (WHICH embeddings frame
     and block column it was built over) cannot be introspected from a
     DataFrame and stays a caller contract: build it over the same
     (embeddings, block_col) the configuration would use inline.
@@ -447,6 +449,11 @@ def release_corpus(
     100 TB target needs.
     """
     import time as _time
+
+    if near_dup_hash != "md5":
+        raise ValueError(
+            f"near_dup_hash={near_dup_hash!r}: md5 is the only near-dup hash lane"
+        )
 
     funnel: dict[str, tuple[int, int]] = {}
     spark = docs.sparkSession
@@ -489,7 +496,6 @@ def release_corpus(
             threshold=near_dup_threshold,
             num_hashes=near_dup_hashes,
             bands=near_dup_bands,
-            hash=near_dup_hash,
         ).select("id_a", "id_b")
     else:
         # shared lane built at a looser cut: refilter is the exact
@@ -504,10 +510,10 @@ def release_corpus(
         if near_pairs_lane_family is None:
             raise ValueError(
                 "near_pairs injected without near_pairs_lane_family: "
-                "the lane's (hash, num_hashes, bands) family is part of "
+                "the lane's (num_hashes, bands) family is part of "
                 "its identity -- pass the family the lane was built with"
             )
-        cfg_family = (near_dup_hash, near_dup_hashes, near_dup_bands)
+        cfg_family = (near_dup_hashes, near_dup_bands)
         if tuple(near_pairs_lane_family) != cfg_family:
             raise ValueError(
                 f"injected near lane family {near_pairs_lane_family} "
@@ -531,10 +537,7 @@ def release_corpus(
     # graph is (lane family, verify threshold) over the front; the
     # semantic graph additionally depends on the near stage's survivor
     # set (hence carries the near threshold too) and the cosine cut
-    _nd_sig = (
-        f"{near_dup_hash}{near_dup_hashes}x{near_dup_bands}"
-        f"_t{near_dup_threshold}"
-    )
+    _nd_sig = f"{near_dup_hashes}x{near_dup_bands}_t{near_dup_threshold}"
     near = record(
         "near_dedup",
         _survivors(exact, near_pairs, id_col, text_col, "__grp",

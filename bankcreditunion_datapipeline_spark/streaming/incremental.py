@@ -1485,7 +1485,6 @@ def streaming_release_ingest(
     near_dup_threshold: float = 0.7,
     near_dup_hashes: int = 16,
     near_dup_bands: int = 8,
-    near_dup_hash: str = "xxhash64",
     contamination_ngram: int = 5,
 ) -> None:
     """Ingest half of the release twin: per micro-batch, write three
@@ -1497,9 +1496,9 @@ def streaming_release_ingest(
       n-gram count and benchmark-hit count). Document BODIES are never
       stored: gates, exact dedup, keep policies, contamination, budgets,
       split and shards are all functions of this metadata.
-    - ``sig``: the minhash signature index of the batch (xxhash64
-      production lane), so later batches pair against stored signatures
-      -- history is never re-shingled.
+    - ``sig``: the md5-lane minhash signature index of the batch
+      (build_minhash_index), so later batches pair against stored
+      signatures -- history is never re-shingled.
     - ``pairs``: the batch's near-dup pair delta = intra-batch pairs +
       batch-vs-index pairs (own batch excluded from the index view, so
       a REDELIVERED batch cannot pair against its previous attempt).
@@ -1592,8 +1591,7 @@ def streaming_release_ingest(
             os.path.join(state_dir, "meta", f"batch={batch_id}")
         )
         sigs = build_minhash_index(
-            passed, id_col, text_col, num_hashes=near_dup_hashes,
-            hash=near_dup_hash,
+            passed, id_col, text_col, num_hashes=near_dup_hashes
         ).persist()
         sigs.write.mode("overwrite").parquet(
             os.path.join(state_dir, "sig", f"batch={batch_id}")
@@ -1605,7 +1603,6 @@ def streaming_release_ingest(
             threshold=near_dup_threshold,
             num_hashes=near_dup_hashes,
             bands=near_dup_bands,
-            hash=near_dup_hash,
         ).select("id_a", "id_b")
         pairs = intra
         sig_dir = os.path.join(state_dir, "sig")
@@ -1623,7 +1620,6 @@ def streaming_release_ingest(
                 threshold=near_dup_threshold,
                 num_hashes=near_dup_hashes,
                 bands=near_dup_bands,
-                hash=near_dup_hash,
             ).select(
                 F.least("new_id", "index_id").alias("id_a"),
                 F.greatest("new_id", "index_id").alias("id_b"),

@@ -188,3 +188,19 @@ def test_funnel_span_excision_stage_removes_copied_spans(spark):
             continue
         assert "shared0" not in on[d] and f"d{d}w0" in on[d]
     assert any("shared0" in off[d] for d in off if d != 1)
+
+
+def test_curation_and_release_reject_other_near_dup_hash(spark):
+    # md5 is the only near-dup hash lane; any other value fails loud
+    # instead of silently hashing on md5
+    import pytest
+
+    from bankcreditunion_datapipeline_spark.plans.release import release_corpus
+
+    docs = spark.createDataFrame(
+        [(1, "a", "one two three four")], "doc_id long, source string, text string"
+    )
+    with pytest.raises(ValueError, match="near_dup_hash"):
+        curate_documents(docs, near_dup_hash="xxhash64")
+    with pytest.raises(ValueError, match="near_dup_hash"):
+        release_corpus(docs, near_dup_hash="xxhash64")

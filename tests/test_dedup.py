@@ -8,6 +8,7 @@ import itertools
 from pyspark.sql import functions as F
 
 from bankcreditunion_datapipeline_spark.operators.dedup import (
+    attach_simhash,
     candidate_pairs,
     char_ngrams,
     connected_components,
@@ -17,11 +18,20 @@ from bankcreditunion_datapipeline_spark.operators.dedup import (
     jaccard,
     lsh_band_table,
     minhash_near_dup_pairs,
-    minhash_signature,
-    simhash,
+    portable_minhash_signatures,
     simhash_near_dup_pairs,
     word_shingles,
+    word_shingles_flat,
 )
+
+
+def _md5_signatures(df, num_hashes):
+    """(doc_id, __sig) md5-lane MinHash signatures of word 3-shingles --
+    the same flat digest table minhash_near_dup_pairs signs."""
+    flat = word_shingles_flat(df, "doc_id", "text", 3).select(
+        "doc_id", F.md5("__s").alias("__h")
+    )
+    return portable_minhash_signatures(flat, "doc_id", num_hashes)
 
 
 def _docs(spark):
@@ -46,7 +56,7 @@ def test_exact_dedup_keep_min(spark):
 def test_minhash_finds_near_dups_and_matches_bruteforce(spark):
     df = _docs(spark)
     pairs = minhash_near_dup_pairs(df, threshold=0.5, num_hashes=32, bands=16)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    got = {(r.id_a, r.id_b): r.jaccard_sim for r in pairs.collect()}
     # brute-force ground truth on exact shingle jaccard
     sh = {
         r.doc_id: set(r.sh)
@@ -58,21 +68,22 @@ def test_minhash_finds_near_dups_and_matches_bruteforce(spark):
         if j >= 0.5:
             truth.add((a, b))
     # LSH must find every true pair here (high-sim pairs, 16 bands of 2)
-    assert truth <= got
+    assert truth <= set(got)
     # and verification must have removed any false positives below threshold
-    assert got <= truth
+    assert set(got) <= truth
+    # jaccard is exact (verification on full shingle-digest sets), so
+    # the reported sim for the exact-dup pair is 1.0
+    assert got[(1, 6)] == 1.0
 
 
 def test_minhash_jaccard_estimates_true_jaccard(spark):
     df = _docs(spark)
-    sigs = df.select(
-        "doc_id", minhash_signature(word_shingles(F.col("text")), 128).alias("sig")
-    ).collect()
+    sigs = _md5_signatures(df, 128).collect()
     sh = {
         r.doc_id: set(r.sh)
         for r in df.select("doc_id", word_shingles(F.col("text")).alias("sh")).collect()
     }
-    sig = {r.doc_id: r.sig for r in sigs}
+    sig = {r.doc_id: r["__sig"] for r in sigs}
     true_j = len(sh[1] & sh[2]) / len(sh[1] | sh[2])
     est_j = sum(a == b for a, b in zip(sig[1], sig[2])) / 128
     assert abs(true_j - est_j) < 0.15
@@ -98,7 +109,7 @@ def test_connected_components_labels_clusters(spark):
 
 def test_simhash_similar_docs_close(spark):
     df = _docs(spark)
-    sigs = {r.doc_id: r.s for r in df.select("doc_id", simhash(F.col("text")).alias("s")).collect()}
+    sigs = {r.doc_id: r["__sim"] for r in attach_simhash(df, "doc_id", "text").collect()}
     ham = lambda a, b: bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
     assert ham(sigs[1], sigs[6]) == 0  # identical text
     assert ham(sigs[1], sigs[2]) < ham(sigs[1], sigs[4])  # near-dup closer than unrelated
@@ -108,6 +119,14 @@ def test_simhash_near_dup_pairs_pigeonhole(spark):
     df = _docs(spark)
     pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_near_dup_pairs(df, max_hamming=10, chunks=16).collect()}
     assert (1, 6) in pairs and pairs[(1, 6)] == 0
+    # pigeonhole completeness: every pair within the radius is found
+    sigs = {r.doc_id: r["__sim"] for r in attach_simhash(df, "doc_id", "text").collect()}
+    truth = {}
+    for a, b in itertools.combinations(sorted(sigs), 2):
+        ham = bin(sigs[a] ^ sigs[b]).count("1")
+        if ham <= 10:
+            truth[(a, b)] = ham
+    assert pairs == truth
 
 
 def test_char_ngram_jaccard(spark):
@@ -139,35 +158,34 @@ def test_embedding_near_dup_recall_vs_bruteforce(spark):
 
 def test_lsh_band_table_shape(spark):
     df = spark.createDataFrame([(1, "a b c d e f g h")], "doc_id long, text string")
-    sigs = df.select("doc_id", minhash_signature(word_shingles(F.col("text")), 32).alias("sig"))
-    bt = lsh_band_table(sigs, "doc_id", "sig", bands=8)
+    bt = lsh_band_table(_md5_signatures(df, 32), "doc_id", "__sig", bands=8)
     assert bt.count() == 8
     assert bt.columns == ["doc_id", "band_id", "band_hash"]
     # same doc twice -> candidate pair found
     two = df.union(spark.createDataFrame([(2, "a b c d e f g h")], "doc_id long, text string"))
-    sigs2 = two.select("doc_id", minhash_signature(word_shingles(F.col("text")), 32).alias("sig"))
-    cp = candidate_pairs(lsh_band_table(sigs2, "doc_id", "sig", 8), "doc_id").collect()
+    cp = candidate_pairs(
+        lsh_band_table(_md5_signatures(two, 32), "doc_id", "__sig", 8), "doc_id"
+    ).collect()
     assert [(r.id_a, r.id_b) for r in cp] == [(1, 2)]
 
 
 def test_incremental_near_dups_matches_full_run(spark, sf_dir):
+    # the index/delta split finds exactly the cross pairs of the
+    # monolithic run (the q335 streaming replay grade rests on this)
     from bankcreditunion_datapipeline_spark.operators.dedup import (
         build_minhash_index,
         incremental_near_dup_pairs,
-        minhash_near_dup_pairs,
     )
     from bankcreditunion_datapipeline_spark.sources.files import read_testdata
 
     docs = read_testdata(spark, sf_dir, "documents")
     existing = docs.filter(F.col("doc_id") % 2 == 0)   # "corpus"
     delta = docs.filter(F.col("doc_id") % 2 == 1)      # "today's arrivals"
-    index = build_minhash_index(existing).persist()
-    inc = incremental_near_dup_pairs(delta, index)
-    inc_pairs = {
-        frozenset((r.new_id, r.index_id)) for r in inc.collect()
-    }
+    index = build_minhash_index(existing, num_hashes=16).persist()
+    inc = incremental_near_dup_pairs(delta, index, num_hashes=16, bands=8)
+    inc_pairs = {frozenset((r.new_id, r.index_id)) for r in inc.collect()}
     # ground truth: full-corpus run restricted to (odd, even) cross pairs
-    full = minhash_near_dup_pairs(docs)
+    full = minhash_near_dup_pairs(docs, num_hashes=16, bands=8)
     cross = {
         frozenset((r.id_a, r.id_b))
         for r in full.collect()
@@ -177,64 +195,26 @@ def test_incremental_near_dups_matches_full_run(spark, sf_dir):
     assert len(inc_pairs) > 0  # fixture contains cross near-dups
 
 
-def test_incremental_near_dups_md5_lane_matches_full_run(spark, sf_dir):
-    # r14: the md5 (SQL-replayable) lane rides the same index/delta
-    # split as production xxhash64 -- intra + cross pair union must
-    # equal the monolithic md5 run (the q335 streaming replay grade
-    # rests on this)
-    from bankcreditunion_datapipeline_spark.operators.dedup import (
-        build_minhash_index,
-        incremental_near_dup_pairs,
-        minhash_near_dup_pairs,
-    )
-    from bankcreditunion_datapipeline_spark.sources.files import read_testdata
-
-    docs = read_testdata(spark, sf_dir, "documents")
-    existing = docs.filter(F.col("doc_id") % 2 == 0)
-    delta = docs.filter(F.col("doc_id") % 2 == 1)
-    index = build_minhash_index(existing, num_hashes=16, hash="md5").persist()
-    inc = incremental_near_dup_pairs(
-        delta, index, num_hashes=16, bands=8, hash="md5"
-    )
-    inc_pairs = {frozenset((r.new_id, r.index_id)) for r in inc.collect()}
-    full = minhash_near_dup_pairs(docs, num_hashes=16, bands=8, hash="md5")
-    cross = {
-        frozenset((r.id_a, r.id_b))
-        for r in full.collect()
-        if (r.id_a % 2) != (r.id_b % 2)
-    }
-    assert inc_pairs == cross
-    assert len(inc_pairs) > 0
-
-
 def test_minhash_survives_null_text(spark):
-    """A NULL-text document must yield a NULL signature (and no pairs), not
-    a TypeError inside the Arrow batch (ADVICE r1: np.asarray(None) crash)."""
-    from bankcreditunion_datapipeline_spark.operators.dedup import (
-        attach_minhash_from_hashes,
-    )
-
+    """NULL and empty text contribute no shingle rows, so they get no
+    signature and no pairs, and the pipeline still pairs the identical
+    docs."""
     base = "the quick brown fox jumps over the lazy dog near the river bank"
     df = spark.createDataFrame(
         [(1, base), (2, base), (3, None), (4, "")],
         "doc_id long, text string",
     )
-    shingled = df.select(
-        "doc_id", word_shingles(F.col("text"), 3).alias("__sh")
-    ).withColumn("__hashes", F.transform(F.col("__sh"), lambda s: F.xxhash64(s)))
-    sigs = {
-        r["doc_id"]: r["__sig"]
-        for r in attach_minhash_from_hashes(shingled, "__hashes", 16, "__sig").collect()
-    }
-    assert sigs[3] is None           # NULL text -> NULL signature
-    assert sigs[4] is None           # empty text -> NULL signature, not hash("")
+    shingled = {r.doc_id for r in word_shingles_flat(df, "doc_id", "text", 3).collect()}
+    assert shingled == {1, 2}        # NULL / empty text -> no shingle rows
+    sigs = {r["doc_id"]: r["__sig"] for r in _md5_signatures(df, 16).collect()}
+    assert set(sigs) == {1, 2}
     assert sigs[1] == sigs[2]        # identical docs agree
-    assert sigs[1] is not None and len(sigs[1]) == 16
-    # end-to-end: the full pipeline still finds the (1,2) pair and no NULL ids
+    assert len(sigs[1]) == 16
+    # end-to-end: the full pipeline still finds the (1,2) pair and no
+    # pair touches the NULL or empty doc
     pairs = {(r.id_a, r.id_b) for r in
              minhash_near_dup_pairs(df, threshold=0.5, num_hashes=16, bands=8).collect()}
-    assert (1, 2) in pairs
-    assert all(a is not None and b is not None for a, b in pairs)
+    assert pairs == {(1, 2)}
 
 
 def test_incremental_exact_dedup_vs_index(spark):
@@ -314,18 +294,28 @@ def test_ngram_jaccard_pairs_identical_and_disjoint(spark):
         ngram_jaccard_pairs,
     )
 
-    # doc 7 shares no character 5-gram with any other doc
-    disjoint = spark.createDataFrame(
-        [(7, "0123 4567 8901 2345 6789")], "doc_id long, text string"
+    # doc 7 shares no character 5-gram with any other doc; the NULL-text
+    # docs 8 and 9 have no n-grams, so they pair with nothing
+    extra = spark.createDataFrame(
+        [(7, "0123 4567 8901 2345 6789"), (8, None), (9, None)],
+        "doc_id long, text string",
     )
     threshold = 0.6
     pairs = ngram_jaccard_pairs(
-        _docs(spark).union(disjoint), threshold=threshold
+        _docs(spark).union(extra), threshold=threshold
     ).collect()
     sims = {(r.id_a, r.id_b): r.jaccard_sim for r in pairs}
     assert sims[(1, 6)] == 1.0  # identical docs
-    assert not any(7 in pair for pair in sims)
+    assert not any({7, 8, 9} & set(pair) for pair in sims)
     assert all(s >= threshold for s in sims.values())
+    # every reported sim is the exact character-5-gram Jaccard
+    grams = {
+        r.doc_id: set(r.g)
+        for r in _docs(spark).select("doc_id", char_ngrams(F.col("text"), 5).alias("g")).collect()
+    }
+    for (a, b), sim in sims.items():
+        want = len(grams[a] & grams[b]) / len(grams[a] | grams[b])
+        assert sim == round(want, 6), (a, b)
 
 
 def test_connected_components_star_matches_propagation(spark):
@@ -524,49 +514,43 @@ def test_word_shingles_flat_matches_array_form(spark):
     assert flat == want
 
 
-def test_minhash_md5_lane_matches_xxhash_semantics(spark):
-    """The portable md5 lane finds the same verified near-dup pairs as
-    the production xxhash64 lane on high-similarity docs (verification
-    is exact Jaccard either way; only candidate recall could differ)."""
-    df = _docs(spark)
-    md5_pairs = {
-        (r.id_a, r.id_b): r.jaccard_sim
-        for r in minhash_near_dup_pairs(
-            df, threshold=0.5, num_hashes=32, bands=16, hash="md5"
-        ).collect()
-    }
-    xx_pairs = {
-        (r.id_a, r.id_b)
-        for r in minhash_near_dup_pairs(
-            df, threshold=0.5, num_hashes=32, bands=16, hash="xxhash64"
-        ).collect()
-    }
-    assert set(md5_pairs) == xx_pairs
-    # jaccard is exact (verification on full shingle-digest sets), so
-    # the reported sim for the exact-dup pair is 1.0
-    assert md5_pairs[(1, 6)] == 1.0
-
-
 def test_simhash_md5_lane_is_60_bit_and_finds_exact_dups(spark):
-    from bankcreditunion_datapipeline_spark.operators.dedup import (
-        attach_simhash,
-    )
-    from bankcreditunion_datapipeline_spark.functions.hashing import md5lane
-
     df = _docs(spark)
     sigs = {
         r["doc_id"]: r["__sim"]
-        for r in attach_simhash(df, "doc_id", "text", "__sim", md5lane, 60).collect()
+        for r in attach_simhash(df, "doc_id", "text", "__sim").collect()
     }
     assert all(0 <= s < (1 << 60) for s in sigs.values())  # 60-bit positive
     assert sigs[1] == sigs[6]  # identical text -> identical signature
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in simhash_near_dup_pairs(
-            df, max_hamming=3, chunks=4, hash="md5"
-        ).collect()
+        for r in simhash_near_dup_pairs(df, max_hamming=3, chunks=4).collect()
     }
     assert pairs[(1, 6)] == 0
+
+
+def test_near_dup_operators_have_one_lane():
+    """md5 is the only near-dup hash lane: no operator takes an option
+    that selects another hash, token hasher, band hasher or width."""
+    import inspect
+
+    from bankcreditunion_datapipeline_spark.operators import dedup
+    from bankcreditunion_datapipeline_spark.streaming.incremental import (
+        streaming_release_ingest,
+    )
+
+    lane_options = {"hash", "token_hasher", "bits", "band_hasher", "near_dup_hash"}
+    for fn in (
+        dedup.minhash_near_dup_pairs,
+        dedup.simhash_near_dup_pairs,
+        dedup.build_minhash_index,
+        dedup.incremental_near_dup_pairs,
+        dedup.attach_simhash,
+        dedup.lsh_band_table,
+        streaming_release_ingest,
+    ):
+        params = set(inspect.signature(fn).parameters)
+        assert not params & lane_options, (fn.__name__, params & lane_options)
 
 
 def test_exact_jaccard_pair_row_budget_guard(spark):

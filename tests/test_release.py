@@ -57,7 +57,6 @@ def test_release_funnel_monotone_and_manifest_consistent(spark):
         _corpus(spark),
         min_quality=0.0,
         length_quantile=1.0,
-        near_dup_hash="md5",
         near_dup_threshold=0.5,
         total_token_budget=100000,
         n_shards=2,
@@ -92,7 +91,6 @@ def test_release_keep_policy_survivor_and_exact_dedup(spark):
         _corpus(spark),
         min_quality=0.0,
         length_quantile=1.0,
-        near_dup_hash="md5",
         near_dup_threshold=0.5,
     )
     kept = {
@@ -111,9 +109,9 @@ def test_release_keep_policy_survivor_and_exact_dedup(spark):
 def test_release_split_is_cluster_hashed_and_deterministic(spark):
     docs = _corpus(spark)
     r1 = release_corpus(docs, min_quality=0.0, length_quantile=1.0,
-                        near_dup_hash="md5", near_dup_threshold=0.5)
+                        near_dup_threshold=0.5)
     r2 = release_corpus(docs, min_quality=0.0, length_quantile=1.0,
-                        near_dup_hash="md5", near_dup_threshold=0.5)
+                        near_dup_threshold=0.5)
     ids1 = sorted(r["doc_id"] for r in r1.holdout.collect())
     ids2 = sorted(r["doc_id"] for r in r2.holdout.collect())
     assert ids1 == ids2  # split is a pure function of the corpus
@@ -144,7 +142,7 @@ def test_release_contamination_gate_rejects_benchmark_overlap(spark):
     )
     res = release_corpus(
         docs, benchmark=bench, min_quality=0.0, length_quantile=1.0,
-        near_dup_hash="md5", near_dup_threshold=0.5
+        near_dup_threshold=0.5
     )
     kept = {
         r["doc_id"]
@@ -178,7 +176,7 @@ def test_release_semantic_stage_and_skip_behaviour(spark):
     )
     res = release_corpus(
         docs, embeddings=emb, min_quality=0.0, length_quantile=1.0,
-        near_dup_hash="md5", semantic_threshold=0.95
+        semantic_threshold=0.95
     )
     kept = {
         r["doc_id"]
@@ -194,7 +192,6 @@ def test_release_semantic_stage_and_skip_behaviour(spark):
         embeddings=emb.filter(F.col("vec_id") != 3),
         min_quality=0.0,
         length_quantile=1.0,
-        near_dup_hash="md5",
         semantic_threshold=0.95,
     )
     kept2 = {
@@ -212,7 +209,6 @@ def test_release_write_layout(spark, tmp_path):
         _corpus(spark),
         min_quality=0.0,
         length_quantile=1.0,
-        near_dup_hash="md5",
         n_shards=2,
         out_dir=out,
     )
@@ -531,14 +527,14 @@ def test_injected_lane_threshold_contract_fails_loud(spark):
         release_corpus(
             docs, near_pairs=lane, near_pairs_lane_threshold=0.7
         )
-    # family mismatch -> raise (an md5 16x8 lane is not the xxhash64
-    # candidate set the configuration would build inline)
+    # family mismatch -> raise (a 16x4 lane is not the 16x8 candidate
+    # set the configuration would build inline)
     with pytest.raises(ValueError, match="family"):
         release_corpus(
             docs,
             near_pairs=lane,
             near_pairs_lane_threshold=0.7,
-            near_pairs_lane_family=("md5", 16, 8),
+            near_pairs_lane_family=(16, 4),
             near_dup_threshold=0.7,
         )
     # configuration looser than the lane's cut -> raise
@@ -547,7 +543,7 @@ def test_injected_lane_threshold_contract_fails_loud(spark):
             docs,
             near_pairs=lane,
             near_pairs_lane_threshold=0.7,
-            near_pairs_lane_family=("xxhash64", 16, 8),
+            near_pairs_lane_family=(16, 8),
             near_dup_threshold=0.6,
         )
     emb = spark.createDataFrame(
