@@ -4,6 +4,7 @@ ground truth, SimHash, connected components, embedding near-dup recall."""
 from __future__ import annotations
 
 import itertools
+import math
 
 from pyspark.sql import functions as F
 
@@ -71,8 +72,29 @@ def test_minhash_finds_near_dups_and_matches_bruteforce(spark):
     assert truth <= set(got)
     # and verification must have removed any false positives below threshold
     assert set(got) <= truth
-    # jaccard is exact (verification on full shingle-digest sets), so
-    # the reported sim for the exact-dup pair is 1.0
+
+
+def test_minhash_md5_lane_matches_xxhash_semantics(spark):
+    """The md5 lane keeps the semantics the retired xxhash64 lane had:
+    signatures only pick candidates, verification is exact Jaccard on
+    the full shingle-digest sets, so every reported sim is the
+    brute-force shingle Jaccard, floor-truncated at 1e-6."""
+    df = _docs(spark)
+    got = {
+        (r.id_a, r.id_b): r.jaccard_sim
+        for r in minhash_near_dup_pairs(
+            df, threshold=0.5, num_hashes=32, bands=16
+        ).collect()
+    }
+    sh = {
+        r.doc_id: set(r.sh)
+        for r in df.select("doc_id", word_shingles(F.col("text")).alias("sh")).collect()
+    }
+    assert got
+    for (a, b), sim in got.items():
+        n_inter, n_union = len(sh[a] & sh[b]), len(sh[a] | sh[b])
+        assert sim == math.floor(n_inter * 1000000 / n_union) / 1000000
+    # so the reported sim for the exact-dup pair is 1.0
     assert got[(1, 6)] == 1.0
 
 
@@ -181,11 +203,11 @@ def test_incremental_near_dups_matches_full_run(spark, sf_dir):
     docs = read_testdata(spark, sf_dir, "documents")
     existing = docs.filter(F.col("doc_id") % 2 == 0)   # "corpus"
     delta = docs.filter(F.col("doc_id") % 2 == 1)      # "today's arrivals"
-    index = build_minhash_index(existing, num_hashes=16).persist()
-    inc = incremental_near_dup_pairs(delta, index, num_hashes=16, bands=8)
+    index = build_minhash_index(existing).persist()
+    inc = incremental_near_dup_pairs(delta, index)
     inc_pairs = {frozenset((r.new_id, r.index_id)) for r in inc.collect()}
     # ground truth: full-corpus run restricted to (odd, even) cross pairs
-    full = minhash_near_dup_pairs(docs, num_hashes=16, bands=8)
+    full = minhash_near_dup_pairs(docs)
     cross = {
         frozenset((r.id_a, r.id_b))
         for r in full.collect()
@@ -193,6 +215,31 @@ def test_incremental_near_dups_matches_full_run(spark, sf_dir):
     }
     assert inc_pairs == cross
     assert len(inc_pairs) > 0  # fixture contains cross near-dups
+
+
+def test_incremental_near_dups_md5_lane_matches_full_run(spark, sf_dir):
+    # the same index/delta split at the small (16 hashes, 8 bands) md5
+    # family the SQL replay of q335 runs
+    from bankcreditunion_datapipeline_spark.operators.dedup import (
+        build_minhash_index,
+        incremental_near_dup_pairs,
+    )
+    from bankcreditunion_datapipeline_spark.sources.files import read_testdata
+
+    docs = read_testdata(spark, sf_dir, "documents")
+    existing = docs.filter(F.col("doc_id") % 2 == 0)
+    delta = docs.filter(F.col("doc_id") % 2 == 1)
+    index = build_minhash_index(existing, num_hashes=16).persist()
+    inc = incremental_near_dup_pairs(delta, index, num_hashes=16, bands=8)
+    inc_pairs = {frozenset((r.new_id, r.index_id)) for r in inc.collect()}
+    full = minhash_near_dup_pairs(docs, num_hashes=16, bands=8)
+    cross = {
+        frozenset((r.id_a, r.id_b))
+        for r in full.collect()
+        if (r.id_a % 2) != (r.id_b % 2)
+    }
+    assert inc_pairs == cross
+    assert len(inc_pairs) > 0
 
 
 def test_minhash_survives_null_text(spark):
